@@ -13,7 +13,9 @@ paths would be partitioned directories and the loaders are unchanged.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,6 +79,57 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
+
+
+def fixture_version(sf_dir: str, *tables: str) -> str | None:
+    """Version token of the named fixture tables: a hash over (path
+    relative to ``sf_dir``, size, ``st_mtime_ns``) of every file under
+    each ``<table>.parquet`` — a single file or a directory of parts,
+    walked recursively, so any nested part that is added, removed, or
+    rewritten with a new size or mtime changes the token. ``None`` when
+    a path cannot be stat'ed."""
+    entries: list[tuple[str, int, int]] = []
+
+    def visit(path: str) -> None:
+        st = os.stat(path)
+        if stat.S_ISDIR(st.st_mode):
+            for name in sorted(os.listdir(path)):
+                visit(os.path.join(path, name))
+        else:
+            entries.append(
+                (os.path.relpath(path, sf_dir), st.st_size, st.st_mtime_ns)
+            )
+
+    try:
+        for table in tables:
+            visit(os.path.join(sf_dir, f"{table}.parquet"))
+    except OSError:
+        return None
+    return hashlib.sha256(repr(entries).encode()).hexdigest()
+
+
+# applicationId -> {key: value}; holds the live application only
+_SESSION_MEMO: dict[str, dict] = {}
+
+
+def session_memo(spark: SparkSession, key: tuple, compute):
+    """``compute()`` once per ``key`` within the live Spark application,
+    the stored value afterwards. Keys carry a :func:`fixture_version`
+    token so a fixture rewritten under a long-lived session is never
+    served stale; a key containing ``None`` (a fixture that cannot be
+    stat'ed) is computed every time and never stored. The first call
+    under a different ``applicationId`` drops every entry of the
+    previous application, whose DataFrames can no longer run."""
+    if None in key:
+        return compute()
+    app = spark.sparkContext.applicationId
+    memo = _SESSION_MEMO.get(app)
+    if memo is None:
+        _SESSION_MEMO.clear()
+        memo = _SESSION_MEMO[app] = {}
+    if key not in memo:
+        memo[key] = compute()
+    return memo[key]
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import fixture_version, load_table
 
 
 # --- pricing summary (TPC-H Q1 shape: filter → wide agg) -------------------
@@ -474,11 +474,8 @@ def q_orders_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ops.skew import write_bucketed
 
     def fingerprint(name: str) -> str:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        st = os.stat(p)
-        return hashlib.sha256(
-            f"{p}:{st.st_size}:{st.st_mtime_ns}".encode()
-        ).hexdigest()[:12]
+        v = fixture_version(sf_dir, name)
+        return hashlib.sha256(f"{sf_dir}:{v}".encode()).hexdigest()[:12]
 
     def ensure(table: str, df: "DataFrame", key: str) -> None:
         if spark.catalog.tableExists(table):
@@ -3728,11 +3725,8 @@ def dpp_layout_path(sf_dir: str) -> str:
     import os
     import tempfile
 
-    p = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(p)
-    key = hashlib.sha256(
-        f"{p}:{st.st_size}:{st.st_mtime_ns}:dpp1".encode()
-    ).hexdigest()[:16]
+    v = fixture_version(sf_dir, "orders")
+    key = hashlib.sha256(f"{sf_dir}:{v}:dpp1".encode()).hexdigest()[:16]
     return os.path.join(tempfile.gettempdir(), f"ospdms_dpp_orders_{key}")
 
 
@@ -3824,11 +3818,8 @@ def zorder_layout_path(sf_dir: str) -> str:
     import os
     import tempfile
 
-    p = os.path.join(sf_dir, "lineitem.parquet")
-    st = os.stat(p)
-    key = hashlib.sha256(
-        f"{p}:{st.st_size}:{st.st_mtime_ns}:z{_Z_BITS}".encode()
-    ).hexdigest()[:16]
+    v = fixture_version(sf_dir, "lineitem")
+    key = hashlib.sha256(f"{sf_dir}:{v}:z{_Z_BITS}".encode()).hexdigest()[:16]
     return os.path.join(tempfile.gettempdir(), f"ospdms_zorder_li_{key}")
 
 

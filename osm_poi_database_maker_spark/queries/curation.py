@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import fixture_version, load_table, session_memo
 
 # ---------------------------------------------------------------------------
 # decontamination
@@ -1189,29 +1189,9 @@ def _key_ge(order_cols: list, bound: tuple):
     return (c0 > b0) | ((c0 == b0) & _key_ge(order_cols[1:], bound[1:]))
 
 
-_PID_BOUNDS_CACHE: dict[tuple, list] = {}
-
-
-def _fixture_token(sf_dir: str, table: str) -> tuple:
-    """Cache-key component for per-session memoization keyed on a
-    fixture: (sf_dir, table, newest mtime under the fixture path). The
-    mtime guards a long-lived session whose fixture dir is REWRITTEN —
-    the token changes, so stale cached values can't be served (the
-    ``_PAIRS_CACHE`` discipline from queries/dedup.py)."""
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        newest = os.path.getmtime(path)
-        if os.path.isdir(path):
-            for entry in os.scandir(path):
-                newest = max(newest, entry.stat().st_mtime)
-    except OSError:
-        newest = -1.0
-    return (sf_dir, table, newest)
-
-
-def _range_pid(df: DataFrame, order_cols: list, cache_token: tuple | None = None) -> DataFrame:
+def _range_pid(
+    df: DataFrame, order_cols: list, memo_key: tuple[str, str] | None = None
+) -> DataFrame:
     """Ordered equi-depth bucket id (``pid``) as a DETERMINISTIC literal
     expression, replacing ``repartitionByRange + spark_partition_id``.
 
@@ -1220,9 +1200,8 @@ def _range_pid(df: DataFrame, order_cols: list, cache_token: tuple | None = None
     same lineage (the per-bucket ranks and the bucket-offset table are
     separate jobs rejoined on pid) can see DIFFERENT boundaries — the
     pid spaces then disagree and offset+rank is garbage. Sub-sampling
-    only kicks in past ~thousands of rows per partition, so the sf0.1
-    battery never tripped it; the r14 sf1.0 battery did (doc_global_index
-    48k/50k rows mis-ranked, unstable across runs).
+    only kicks in past ~thousands of rows per partition, so small
+    fixtures never trip it while large ones do.
 
     Here the boundaries are computed ONCE — a bounded distributed
     bottom-k by ``xxhash64`` of the key columns (TakeOrdered, one
@@ -1234,27 +1213,24 @@ def _range_pid(df: DataFrame, order_cols: list, cache_token: tuple | None = None
     sample only controls balance). Window shuffles on pid replace the
     range exchange; parallelism stays |buckets| ≈ ``_GIDX_PARTS``.
 
-    ``cache_token`` (r15, the r14 verdict's prescription): when given —
-    a :func:`_fixture_token` identifying the sampled key universe — the
-    thinned bounds are memoized per (Spark application, order columns,
-    token), so repeated invocations in one session (bench rounds, the
-    two sweeps of events_session_overlap, the packing/index twins over
-    the same doc_id universe) skip the boundary-sample job. The sample
-    is a deterministic function of the key universe (TakeOrdered by
-    xxhash64, then sorted/thinned), so the cached bounds are the bounds
-    a recomputation would produce — results are identical with or
-    without the cache, and correctness never depended on WHERE the cuts
-    fall anyway (see above)."""
-    key = None
-    if cache_token is not None:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            tuple(order_cols),
-            cache_token,
-        )
-        cached = _PID_BOUNDS_CACHE.get(key)
-        if cached is not None:
-            return _with_pid(df, order_cols, cached)
+    ``memo_key`` is ``(sf_dir, "<table>.<universe>")``, naming the
+    multiset of keys sampled from fixture ``<table>``: the bounds are
+    memoized per session under that name and the table's
+    :func:`~..io.fixture_version`. The bounds are a deterministic
+    function of the key universe, so memoized bounds equal recomputed
+    ones; callers sharing a name must sample the same multiset."""
+    if memo_key is None:
+        return _with_pid(df, order_cols, _sample_bounds(df, order_cols))
+    sf_dir, name = memo_key
+    bounds = session_memo(
+        df.sparkSession,
+        ("pid_bounds", name, sf_dir, fixture_version(sf_dir, name.split(".")[0])),
+        lambda: _sample_bounds(df, order_cols),
+    )
+    return _with_pid(df, order_cols, bounds)
+
+
+def _sample_bounds(df: DataFrame, order_cols: list) -> list:
     smp = (
         df.select(*order_cols)
         .orderBy(F.xxhash64(*order_cols), *order_cols)
@@ -1267,9 +1243,7 @@ def _range_pid(df: DataFrame, order_cols: list, cache_token: tuple | None = None
     for i in range(step, len(keys), step):
         if not bounds or keys[i] != bounds[-1]:
             bounds.append(keys[i])
-    if key is not None:
-        _PID_BOUNDS_CACHE[key] = bounds
-    return _with_pid(df, order_cols, bounds)
+    return bounds
 
 
 def _with_pid(df: DataFrame, order_cols: list, bounds: list) -> DataFrame:
@@ -1290,7 +1264,7 @@ def _global_rank(
     df: DataFrame,
     order_cols: list,
     out: str = "global_id",
-    cache_token: tuple | None = None,
+    memo_key: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Dense 0-based global rank by ``order_cols`` (a deterministic total
     order) without a single-partition window: deterministic range-bucket
@@ -1302,7 +1276,7 @@ def _global_rank(
     - 1`` exactly; the single-partition exchange exists only under the
     tiny offsets aggregate. The global-order primitive shared by the
     shard indexer and the quantile normalizer."""
-    with_pid = _range_pid(df, order_cols, cache_token=cache_token)
+    with_pid = _range_pid(df, order_cols, memo_key=memo_key)
     w_local = Window.partitionBy("pid").orderBy(*order_cols)
     local = with_pid.withColumn("local_rank", F.row_number().over(w_local))
     w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
@@ -1399,9 +1373,9 @@ def q_doc_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the range partitioner's per-RDD-id boundary sampling can give them
     # different pid spaces past the sampling threshold (see _range_pid —
     # the r14 sf1.0 battery caught exactly that in _global_rank).
-    with_pid = _range_pid(
-        toks, ["doc_id"], cache_token=_fixture_token(sf_dir, "documents")
-    )
+    # "documents.doc_id" is shared with doc_global_index: both sample
+    # every documents row's doc_id, the same multiset
+    with_pid = _range_pid(toks, ["doc_id"], memo_key=(sf_dir, "documents.doc_id"))
     w_local = Window.partitionBy("pid").orderBy("doc_id")
     local = with_pid.withColumn("local_cum", F.sum("n_tok").over(w_local))
     w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
@@ -1473,7 +1447,8 @@ def q_doc_global_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _global_rank(
         d.select("doc_id", "source", "n_chars"),
         ["doc_id"],
-        cache_token=_fixture_token(sf_dir, "documents"),
+        # shared with doc_sequence_packing: the same doc_id multiset
+        memo_key=(sf_dir, "documents.doc_id"),
     ).select("doc_id", "global_id", "source", "n_chars")
 
 
@@ -1606,7 +1581,7 @@ def q_doc_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         d,
         ["n_chars", "doc_id"],
         out="g",
-        cache_token=_fixture_token(sf_dir, "documents"),
+        memo_key=(sf_dir, "documents.n_chars,doc_id"),
     ).select(
         (F.col("g") + 1).alias("k"), F.col("n_chars").alias("norm_chars")
     )

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import fixture_version, load_table, session_memo
 
 
 def q_doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,7 +151,7 @@ def q_doc_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sweep costs 8 tiny aggregates over pairs — the raw corpus is
     touched only for the denominator count. Cutoffs compare against
     the ROUNDED jaccard both engines already agree on."""
-    pairs = _ngram_pairs_cached(spark, sf_dir).select("doc_b", "jaccard")
+    pairs = _ngram_pairs(spark, sf_dir).select("doc_b", "jaccard")
     taus = F.array(*[F.lit(t) for t in _CURVE_TAUS])
     hits = pairs.select(
         "doc_b", "jaccard", F.explode(taus).alias("tau")
@@ -1011,46 +1011,17 @@ WHERE bit_count(xor(sha, shb)) <= 3
 ORACLE_SIMHASH = _simhash_oracle_sql()
 
 
-# Three downstream operators (clusters, survivors, pagerank) consume the
-# same near-dup pair set; memoize its lazily-checkpointed form per
-# (Spark application, sf_dir, fixture mtime) so a session running several
-# of them — the driver gate, bench, a real pipeline — computes the pair
-# generator once. Results are identical with or without the cache (same
-# DataFrame), and q_doc_ngram_jaccard_pairs itself stays un-memoized so
-# its own bench line keeps measuring the raw operator. The mtime token
-# guards a long-lived session whose fixture dir gets REWRITTEN: the key
-# changes, so stale lazily-checkpointed pairs can't be served.
-_PAIRS_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-
-
-def _documents_mtime(sf_dir: str) -> float:
-    """Newest mtime under the documents fixture (file or directory-of-
-    parts) — cheap (one or a few stat calls) and changes whenever the
-    fixture is regenerated."""
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        newest = os.path.getmtime(path)
-        if os.path.isdir(path):
-            for entry in os.scandir(path):
-                newest = max(newest, entry.stat().st_mtime)
-        return newest
-    except OSError:
-        return -1.0
-
-
-def _ngram_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _documents_mtime(sf_dir),
+# Several downstream operators (clusters, survivors, pagerank, …) consume
+# the same near-dup pair set; its lazily-checkpointed form is memoized per
+# session and documents version, so a session running several of them
+# computes the pair generator once. q_doc_ngram_jaccard_pairs itself stays
+# un-memoized so its own bench line keeps measuring the raw operator.
+def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return session_memo(
+        spark,
+        ("ngram_pairs", sf_dir, fixture_version(sf_dir, "documents")),
+        lambda: q_doc_ngram_jaccard_pairs(spark, sf_dir).localCheckpoint(eager=False),
     )
-    df = _PAIRS_CACHE.get(key)
-    if df is None:
-        df = q_doc_ngram_jaccard_pairs(spark, sf_dir).localCheckpoint(eager=False)
-        _PAIRS_CACHE[key] = df
-    return df
 
 
 def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1060,7 +1031,7 @@ def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure in DuckDB over the identical pair set."""
     from ..dedup import dedup_clusters
 
-    return dedup_clusters(_ngram_pairs_cached(spark, sf_dir))
+    return dedup_clusters(_ngram_pairs(spark, sf_dir))
 
 
 def q_doc_survivorship_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1074,7 +1045,7 @@ def q_doc_survivorship_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single cluster-keyed aggregate."""
     from ..dedup import dedup_clusters
 
-    clusters = dedup_clusters(_ngram_pairs_cached(spark, sf_dir)).select(
+    clusters = dedup_clusters(_ngram_pairs(spark, sf_dir)).select(
         "doc_id", "cluster_id"
     )
     d = load_table(spark, sf_dir, "documents").select(
@@ -1217,7 +1188,7 @@ def q_doc_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity; (c) nodes/distinct never materializes — deg's group keys
     ARE the vertex set, so init and N both read deg.
     """
-    pairs = _ngram_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = _ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
     edges = (
         pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
         .unionByName(pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("t")))
@@ -1302,7 +1273,7 @@ def q_doc_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     caps via its shingle df-cap; wedges are a per-vertex degree
     aggregate (Σ deg·(deg−1)/2). Output is one row. The oracle mirrors
     the same pair set through the shared ORACLE_NGRAM CTE."""
-    pairs = _ngram_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = _ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
     e1 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     e2 = pairs.select(F.col("doc_a").alias("b"), F.col("doc_b").alias("c"))
     e3 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("c"))
@@ -1480,7 +1451,7 @@ def q_doc_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ fixed point. The counts ride the already-materialized eager
     checkpoints, so the audit costs 8 count() actions on tiny vectors.
     Emits each core member with its within-core degree."""
-    pairs = _ngram_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = _ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
     # EAGER checkpoints: alive_r is referenced on BOTH join sides of
     # round r+1, so a lazy checkpoint would double the logical plan per
     # round (2^8 copies of the shingle pipeline — measured as minutes of

@@ -994,7 +994,7 @@ def _rank_against(
     markers: DataFrame,
     queries: DataFrame,
     inclusive: bool,
-    cache_token: tuple | None = None,
+    memo_key: tuple[str, str] | None = None,
 ) -> DataFrame:
     """For every query row, the COUNT of marker values ≤ v (inclusive)
     or < v (strict) — a distributed order-statistics sweep, no pair
@@ -1024,10 +1024,7 @@ def _rank_against(
         "sid",
         F.lit(1 if inclusive else 0).alias("kind"),
     )
-    # the two sweeps of one overlap query (and bench reruns) share one
-    # memoized boundary sample: cuts only control balance, and both
-    # sweeps bucket the same session-boundary timestamp universe
-    u = _range_pid(mk.unionByName(qr), ["v"], cache_token=cache_token)
+    u = _range_pid(mk.unionByName(qr), ["v"], memo_key=memo_key)
     w_local = Window.partitionBy("pid").orderBy("v", "kind", "user_id", "sid")
     local = u.withColumn(
         "cum", F.sum("w").over(w_local.rowsBetween(Window.unboundedPreceding, 0))
@@ -1092,20 +1089,20 @@ def q_events_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     # starts ≤ t1_s (inclusive) minus ends < t0_s (strict) minus self
-    from .curation import _fixture_token
-
-    tok = _fixture_token(sf_dir, "events")
+    # both sweeps share "events.session_bounds": each buckets every
+    # session's t0 and t1 (markers ∪ queries), the same multiset
+    memo_key = (sf_dir, "events.session_bounds")
     a = _rank_against(
         sess.select(F.col("t0").alias("v")),
         sess.select("user_id", "sid", F.col("t1").alias("v")),
         inclusive=True,
-        cache_token=tok,
+        memo_key=memo_key,
     ).withColumnRenamed("cnt", "n_start_le")
     b = _rank_against(
         sess.select(F.col("t1").alias("v")),
         sess.select("user_id", "sid", F.col("t0").alias("v")),
         inclusive=False,
-        cache_token=tok,
+        memo_key=memo_key,
     ).withColumnRenamed("cnt", "n_end_lt")
     return (
         sess.join(a, ["user_id", "sid"])

@@ -2059,9 +2059,9 @@ def q_emb_text_alignment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both engines produce bit-identical doubles, which are then
     INTEGERIZED (round 1e6·cos) before the per-bucket mean so no double
     accumulates across pairs (the backtest's MAPE discipline)."""
-    from .dedup import _ngram_pairs_cached
+    from .dedup import _ngram_pairs
 
-    pairs = _ngram_pairs_cached(spark, sf_dir).select("doc_a", "doc_b", "jaccard")
+    pairs = _ngram_pairs(spark, sf_dir).select("doc_a", "doc_b", "jaccard")
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),

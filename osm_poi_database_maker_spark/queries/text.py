@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..io import load_table
+from ..io import fixture_version, load_table, session_memo
 
 _STOPWORDS = ("the", "a", "of", "and", "to")
 
@@ -982,33 +982,17 @@ def q_doc_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir, documents mtime) → (final word table, bests);
-# same lifecycle discipline as dedup._PAIRS_CACHE: the merge-table query
-# and the encoder both consume the 3-step training dataflow, and without
-# memoization every gate run executes it twice. Entries with an
-# unreadable fixture mtime (monkeypatched tests) are never cached.
-_BPE_CACHE: dict = {}
-
-
 def _bpe_train(spark: SparkSession, sf_dir: str):
     """Shared BPE training core: returns (final word table with merged
     symbol sequences, list of per-step best-pair DataFrames). Consumed
     by the merge-table query and the encoder so the learned merges and
-    their application cannot drift apart; memoized per (application,
-    fixture dir, fixture mtime)."""
-    import os
-
-    try:
-        mtime = os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-    except OSError:
-        mtime = None
-    key = (spark.sparkContext.applicationId, sf_dir, mtime)
-    if mtime is not None and key in _BPE_CACHE:
-        return _BPE_CACHE[key]
-    out = _bpe_train_impl(spark, sf_dir)
-    if mtime is not None:
-        _BPE_CACHE[key] = out
-    return out
+    their application cannot drift apart; memoized per session and
+    documents version, so a gate run trains once, not twice."""
+    return session_memo(
+        spark,
+        ("bpe_train", sf_dir, fixture_version(sf_dir, "documents")),
+        lambda: _bpe_train_impl(spark, sf_dir),
+    )
 
 
 def _bpe_train_impl(spark: SparkSession, sf_dir: str):

@@ -21,6 +21,7 @@ backfills through the same code path.
 
 from __future__ import annotations
 
+import functools
 from typing import Any
 
 import pandas as pd
@@ -1796,7 +1797,7 @@ def _simdedup_update(
         retained list), never a per-row Python loop."""
         import numpy as np
 
-        pop16 = _POP16()
+        pop16 = _pop16()
         big = np.iinfo(np.int64).max
 
         def min_match(d, s, rid, rsig):
@@ -1885,18 +1886,12 @@ def _simdedup_update(
     return update
 
 
-_POP16_CACHE: list = []
-
-
-def _POP16():
+@functools.cache
+def _pop16():
     """16-bit popcount lookup (built once per worker)."""
-    if not _POP16_CACHE:
-        import numpy as np
+    import numpy as np
 
-        _POP16_CACHE.append(
-            np.array([bin(i).count("1") for i in range(65536)], dtype=np.int64)
-        )
-    return _POP16_CACHE[0]
+    return np.array([bin(i).count("1") for i in range(65536)], dtype=np.int64)
 
 
 def simhash_dedup_state(

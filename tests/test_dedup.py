@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm_poi_database_maker_spark.dedup import (
@@ -228,49 +229,69 @@ def test_pagerank_star_graph(spark, monkeypatch):
     monkeypatch.setattr(
         D, "q_doc_ngram_jaccard_pairs", lambda spark_, sf_: pairs
     )
-    D._PAIRS_CACHE.clear()  # the memo must not serve a previous fixture
-    try:
-        got = {
-            r.doc_id: r.pagerank
-            for r in D.q_doc_graph_pagerank(spark, "x").collect()
-        }
-    finally:
-        # and the patched star graph must not leak to later tests either
-        D._PAIRS_CACHE.clear()
+    got = {
+        r.doc_id: r.pagerank for r in D.q_doc_graph_pagerank(spark, "x").collect()
+    }
     assert set(got) == {1, 2, 3, 4}
     assert got[1] > max(got[2], got[3], got[4])
     assert got[2] == got[3] == got[4]
     assert abs(sum(got.values()) - 1.0) < 1e-4
 
 
-def test_pairs_cache_invalidated_by_fixture_rewrite(spark, tmp_path):
-    """_PAIRS_CACHE keys on the documents fixture's mtime: rewriting the
-    fixture dir within one Spark application must produce a fresh pair
-    set, not a stale lazily-checkpointed one."""
+@pytest.mark.parametrize(
+    "change",
+    [
+        "untouched",
+        "part_touched",
+        "part_resized_mtime_kept",
+        "part_added",
+        "file_touched",
+        "unstatable",
+        "other_application",
+    ],
+)
+def test_pairs_memo_tracks_fixture_version(spark, tmp_path, monkeypatch, change):
+    """The near-dup pair set is memoized through io.session_memo under
+    io.fixture_version: a second call on an untouched fixture is served
+    from the memo; a rewritten, resized (old mtime restored) or added
+    nested part, or a touched single-file fixture, is recomputed; a
+    fixture that cannot be stat'ed is never memoized; and entries of
+    another Spark application are never served."""
     import os
-    import shutil
+    from types import SimpleNamespace
 
     from osm_poi_database_maker_spark.queries import dedup as D
-    from tests.conftest import SF_SMOKE
 
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    shutil.copytree(
-        os.path.join(SF_SMOKE, "documents.parquet"),
-        os.path.join(sf, "documents.parquet"),
-    ) if os.path.isdir(os.path.join(SF_SMOKE, "documents.parquet")) else shutil.copy(
-        os.path.join(SF_SMOKE, "documents.parquet"),
-        os.path.join(sf, "documents.parquet"),
+    sf = tmp_path / "sf"
+    if change == "file_touched":
+        part = sf / "documents.parquet"
+    else:
+        part = sf / "documents.parquet" / "day=1" / "part-0.parquet"
+    part.parent.mkdir(parents=True)
+    part.write_bytes(b"x" * 10)
+    if change == "unstatable":
+        sf = tmp_path / "missing"
+    calls = []
+    monkeypatch.setattr(
+        D,
+        "q_doc_ngram_jaccard_pairs",
+        lambda s_, sf_: calls.append(sf_) or spark.range(1),
     )
-    D._ngram_pairs_cached(spark, sf)
-    n_before = len(D._PAIRS_CACHE)
-    # same dir, untouched -> cache hit
-    D._ngram_pairs_cached(spark, sf)
-    assert len(D._PAIRS_CACHE) == n_before
-    # rewrite (mtime bump) -> new key, fresh pairs
-    os.utime(os.path.join(sf, "documents.parquet"))
-    D._ngram_pairs_cached(spark, sf)
-    assert len(D._PAIRS_CACHE) == n_before + 1
+    first = spark
+    if change == "other_application":
+        first = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="other"))
+
+    D._ngram_pairs(first, str(sf))
+    st = part.stat()
+    if change in ("part_touched", "file_touched"):
+        os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    elif change == "part_resized_mtime_kept":
+        part.write_bytes(b"x" * 11)
+        os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns))
+    elif change == "part_added":
+        (part.parent / "part-1.parquet").write_bytes(b"y")
+    D._ngram_pairs(spark, str(sf))
+    assert len(calls) == (1 if change == "untouched" else 2)
 
 
 def test_substring_dedup_run_lengths(spark, tmp_path):
@@ -422,11 +443,7 @@ def test_kcore_peels_tails_and_keeps_cliques(spark, monkeypatch):
         "jaccard", F.lit(1.0)
     )
     monkeypatch.setattr(D, "q_doc_ngram_jaccard_pairs", lambda s_, sf_: pairs)
-    D._PAIRS_CACHE.clear()
-    try:
-        out = {r.doc_id: r.core_deg for r in D.q_doc_graph_kcore(spark, "x").collect()}
-    finally:
-        D._PAIRS_CACHE.clear()
+    out = {r.doc_id: r.core_deg for r in D.q_doc_graph_kcore(spark, "x").collect()}
     assert out == {1: 2, 2: 2, 3: 2}
 
 

@@ -204,7 +204,7 @@ def test_triangles_planted(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], "doc_a long, doc_b long"
     ).withColumn("shared", F.lit(1)).withColumn("jaccard", F.lit(1.0))
-    monkeypatch.setattr(D, "_ngram_pairs_cached", lambda s, sf: pairs)
+    monkeypatch.setattr(D, "_ngram_pairs", lambda s, sf: pairs)
     r = D.q_doc_graph_triangles(spark, "x").collect()[0]
     # degrees: 1->2, 2->2, 3->3, 4->1; wedges = 1+1+3+0 = 5
     assert (r.n_edges, r.n_triangles, r.n_wedges) == (4, 1, 5)
