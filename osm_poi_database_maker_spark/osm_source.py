@@ -11,7 +11,7 @@ distributed Spark.
 
 pyosmium is an optional dependency — this module imports lazily and
 raises a clear error when it's absent. :mod:`.pbf` is the native,
-always-available path: a pure-Python PBF wire-format codec whose decode
+always-available path: a numpy/Arrow PBF wire-format codec whose decode
 distributes over executors (blob-parallel), fully tested in this
 container; prefer it unless osmium's geometry assembly (areas from
 relations) is specifically needed.

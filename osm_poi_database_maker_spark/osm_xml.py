@@ -24,7 +24,7 @@ from datetime import datetime, timezone
 from typing import Any, Iterator
 from xml.etree import ElementTree
 
-from .pbf import PBF_ENTITY_DDL, _COLS, _base_row, resolve_osm_paths
+from .pbf import PBF_ENTITY_DDL, _COLS, resolve_osm_paths
 
 _TOP_RE = re.compile(rb"<(node|way|relation)[\s/>]|<!--")
 _COMMENT_END = b"-->"
@@ -44,7 +44,10 @@ def _parse_ts_ms(ts: str | None) -> int | None:
 
 def _element_to_row(name: str, elem: ElementTree.Element) -> dict[str, Any]:
     a = elem.attrib
-    row = _base_row(name)
+    row: dict[str, Any] = dict.fromkeys(
+        ("lon", "lat", "refs", "member_ids", "member_types", "member_roles")
+    )
+    row["osm_type"] = name
     row["id"] = int(a["id"])
     row["version"] = int(a["version"]) if "version" in a else None
     row["user_id"] = int(a["uid"]) if "uid" in a else None
@@ -232,7 +235,8 @@ def read_osm_xml(spark, path, chunk_bytes: int | None = None):
             for pth, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):
                 rows.extend(parse_xml_range(pth, int(s), int(e)))
             out = pd.DataFrame.from_records(rows, columns=["tstamp_ms", *_COLS])
-            out["tstamp"] = pd.to_datetime(out["tstamp_ms"], unit="ms")
+            # UTC-aware, so Spark keeps the instant in any session zone
+            out["tstamp"] = pd.to_datetime(out["tstamp_ms"], unit="ms", utc=True)
             yield out[_COLS]
 
     return idx.mapInPandas(decode, schema=PBF_ENTITY_DDL)

@@ -2,7 +2,7 @@
 
 PySpark 4's Python DataSource API (pyspark.sql.datasource) lets the PBF
 codec plug into Spark's own source machinery instead of the two-step
-"build an index DataFrame, mapInPandas the decode" recipe in
+"build an index DataFrame, mapInArrow the decode" recipe in
 :func:`osm_poi_database_maker_spark.pbf.read_pbf`:
 
 * **planning** — the driver-side blob index (header seeks only, no
@@ -12,14 +12,13 @@ codec plug into Spark's own source machinery instead of the two-step
   scan composes with everything a real source does (``.filter``/
   ``.select`` stay Catalyst-side on the scan's output).
 * **execution** — ``read(partition)`` opens its own file handle and
-  decodes its blobs, identical executor work to the mapInPandas path.
+  yields the Arrow batches of :func:`~.pbf.decode_blobs`, the same
+  executor work and the same batches as the mapInArrow path.
 
-Row-tuple handoff (the API also accepts Arrow batches) keeps this path
-conversion-free and obviously correct; it is the COMPATIBILITY surface.
-``read_pbf`` remains the measured fast path — its Arrow-batched pandas
-exchange beats tuple pickling on wide maps/arrays — and both decode
-through the same :mod:`.pbf` codec, so the paths cannot drift
-semantically (pinned by tests/test_pbf_datasource.py equivalence).
+Both paths hand Spark :func:`~.pbf.decode_block`'s batches unchanged, so
+they cannot drift apart: ``tstamp`` is a UTC instant on both, whatever
+the session time zone (pinned by tests/test_pbf_datasource.py and
+tests/test_pbf.py).
 
 Reference parity: the reference ingests PBF via osmium handlers
 (filter.py:260); here the same capability is a registered Spark source:
@@ -29,19 +28,12 @@ Reference parity: the reference ingests PBF via osmium handlers
 
 from __future__ import annotations
 
-import datetime as _dt
-from typing import Any, Iterator
+from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from .pbf import (
-    _COLS,
-    PBF_ENTITY_DDL,
-    decode_primitive_block,
-    decompress_blob,
-    resolve_osm_paths,
-    scan_blob_index,
-)
+from .pbf import PBF_ENTITY_DDL, decode_blobs, resolve_osm_paths, scan_blob_index
 
 
 class OsmPbfInputPartition(InputPartition):
@@ -74,34 +66,8 @@ class OsmPbfReader(DataSourceReader):
         groups = [index[i : i + k] for i in range(0, len(index), k)] or [[]]
         return [OsmPbfInputPartition(g) for g in groups]
 
-    def read(self, partition: OsmPbfInputPartition) -> Iterator[tuple]:
-        by_path: dict[str, list[tuple[int, int]]] = {}
-        for pth, off, size in partition.blobs:
-            by_path.setdefault(pth, []).append((off, size))
-        for pth, blobs in by_path.items():
-            with open(pth, "rb") as f:
-                for off, size in blobs:
-                    f.seek(off)
-                    raw = decompress_blob(f.read(size))
-                    for row in decode_primitive_block(raw):
-                        yield _to_tuple(row)
-
-
-def _to_tuple(row: dict[str, Any]) -> tuple:
-    # naive-UTC datetime mirrors read_pbf's pd.to_datetime(unit="ms")
-    # exactly, so both paths convert to session time identically
-    ms = row.get("tstamp_ms")
-    ts = (
-        None
-        if ms is None
-        else _dt.datetime.fromtimestamp(ms / 1000.0, tz=_dt.timezone.utc).replace(
-            tzinfo=None
-        )
-    )
-    out = []
-    for c in _COLS:
-        out.append(ts if c == "tstamp" else row.get(c))
-    return tuple(out)
+    def read(self, partition: OsmPbfInputPartition) -> Iterator[pa.RecordBatch]:
+        return decode_blobs(partition.blobs)
 
 
 class OsmPbfDataSource(DataSource):

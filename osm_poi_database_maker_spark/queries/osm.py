@@ -903,7 +903,7 @@ def q_osm_pbf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end O1: encode the fixture entities to REAL .osm.pbf bytes
     (zlib blobs, DenseNodes delta columns, string tables — pbf.encode_pbf),
     then scan them back with the distributed reader (pbf.read_pbf: blob
-    index on the driver, per-blob decode fanned out via mapInPandas).
+    index on the driver, per-blob decode fanned out via mapInArrow).
     The oracle embeds the same entities as literals, so every decoded
     field — delta-coded ids, 100-nanodegree coords, string-table tags,
     relation member triples — is differentially verified.
@@ -936,7 +936,7 @@ def q_osm_pbf_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     read via the registered Python DataSource
     (``spark.read.format("osmpbf")`` — pbf_datasource.py), checked
     against the SAME oracle literals as q_osm_pbf_scan. One codec, two
-    plumbing paths (DataSource partitions vs index+mapInPandas), both
+    plumbing paths (DataSource partitions vs index+mapInArrow), both
     differentially verified — so neither path can drift from the wire
     format or from each other. blobspertask=1 makes every blob its own
     InputPartition, the maximal-parallelism planning shape."""

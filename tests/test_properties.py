@@ -581,3 +581,192 @@ def test_kn_bigram_formula_is_a_probability_distribution():
             for w2 in vocab2
         )
         assert abs(total - 1.0) < 1e-12, (w1, total)
+
+
+# --- PBF codec: the numpy varint kernels against the scalar decoder -------
+
+
+def _scalar_varints(pbf, buf) -> list[int]:
+    out, i = [], 0
+    while i < len(buf):
+        v, i = pbf._uvarint(buf, i)
+        out.append(v)
+    return out
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.lists(st.integers(-(2**63), 2**63 - 1), max_size=5), max_size=6))
+def test_varint_kernels_match_scalar_decoder(per_entity):
+    """_varints / _sint_deltas / _packed_many + _restart_deltas equal the
+    scalar _uvarint loop, with per-entity delta restarts and 64-bit
+    wrap-around."""
+    from osm_poi_database_maker_spark import pbf
+
+    flat = [v for vals in per_entity for v in vals]
+    raw = b"".join(pbf._enc_uvarint(v) for v in flat)
+    assert pbf._varints(raw).tolist() == _scalar_varints(pbf, raw)
+    assert pbf._varints(raw).view("int64").tolist() == flat
+
+    def wrap(v):  # int64 two's complement
+        return (v + 2**63) % 2**64 - 2**63
+
+    deltas = [wrap(b - a) for a, b in zip([0, *flat], flat)]
+    packed = b"".join(pbf._enc_zigzag(d) for d in deltas)
+    assert [pbf._zigzag(u) for u in _scalar_varints(pbf, packed)] == deltas
+    assert pbf._sint_deltas(packed).tolist() == flat
+
+    bufs = [b"".join(pbf._delta_zigzag(vals)) for vals in per_entity]
+    values, counts = pbf._packed_many(bufs)
+    assert counts.tolist() == [len(vals) for vals in per_entity]
+    assert pbf._restart_deltas(values, counts).tolist() == flat
+
+
+# --- PBF codec: every reader returns exactly the encoded entities ----------
+
+_I64 = st.integers(-(2**63), 2**63 - 1)  # deltas wrap; 10-byte varints
+_STR = st.text(st.characters(blacklist_categories=("Cs",)), max_size=6)
+# "" values share string-table index 0 with the DenseNodes delimiter
+_TAGS = st.dictionaries(
+    st.text(st.characters(blacklist_categories=("Cs",)), min_size=1, max_size=6),
+    st.one_of(st.just(""), _STR),
+    max_size=3,
+)
+_INFO = st.fixed_dictionaries(
+    {},
+    optional={
+        "version": st.integers(0, 2**31 - 1),
+        "user_id": st.integers(-(2**31), 2**31 - 1),
+        "changeset_id": _I64,
+        "tstamp_ms": st.integers(-(2**31), 2**32).map(lambda s: s * 1000),
+    },
+)
+
+
+def _degrees(limit: int):
+    # on the default 100-nanodegree grid, as the decoder computes it
+    return st.integers(-limit, limit).map(lambda raw: 1e-9 * (100 * raw))
+
+
+_NODE = st.builds(
+    lambda info, **kw: {**info, **kw},
+    _INFO,
+    id=_I64,
+    lon=_degrees(1_800_000_000),
+    lat=_degrees(900_000_000),
+    tags=_TAGS,
+)
+_WAY = st.builds(
+    lambda info, **kw: {**info, **kw},
+    _INFO,
+    id=_I64,
+    tags=_TAGS,
+    refs=st.lists(_I64, max_size=4),
+)
+_RELATION = st.builds(
+    lambda info, **kw: {**info, **kw},
+    _INFO,
+    id=_I64,
+    tags=_TAGS,
+    members=st.lists(
+        st.tuples(st.sampled_from(["node", "way", "relation"]), _I64, _STR), max_size=3
+    ),
+)
+
+
+def _plain_node_block(nodes) -> bytes:
+    """One PrimitiveGroup of non-dense Node messages (encode_pbf writes
+    DenseNodes only)."""
+    from osm_poi_database_maker_spark import pbf
+
+    strings = pbf._StringTable()
+    group = b""
+    for n in nodes:
+        body = (
+            pbf._enc_uvarint(1 << 3) + pbf._enc_zigzag(n["id"])
+            + pbf._enc_kv(n["tags"], strings)
+            + pbf._enc_field_bytes(4, pbf._enc_info(n, 1000))
+            + pbf._enc_uvarint(8 << 3) + pbf._enc_zigzag(round(n["lat"] * 1e9) // 100)
+            + pbf._enc_uvarint(9 << 3) + pbf._enc_zigzag(round(n["lon"] * 1e9) // 100)
+        )
+        group += pbf._enc_field_bytes(1, body)
+    return pbf._enc_field_bytes(1, strings.encode()) + pbf._enc_field_bytes(2, group)
+
+
+def _entity_key(kind, e, dense=False):
+    info = [e.get(f) for f in ("version", "user_id", "tstamp_ms", "changeset_id")]
+    if dense:  # DenseInfo is columnar: the encoder writes absent fields as 0
+        info = [v or 0 for v in info]
+    members = e.get("members")
+    return (
+        kind, e["id"], *info, tuple(e["tags"].items()), e.get("lon"), e.get("lat"),
+        None if e.get("refs") is None else tuple(e["refs"]),
+        None if members is None else tuple(map(tuple, members)),
+    )
+
+
+def _decoded_key(r):
+    members = None
+    if r["member_ids"] is not None:
+        members = tuple(zip(r["member_types"], r["member_ids"], r["member_roles"]))
+    return (
+        r["osm_type"], r["id"], r["version"], r["user_id"], r["tstamp_ms"],
+        r["changeset_id"], tuple(r["tags"].items()), r["lon"], r["lat"],
+        None if r["refs"] is None else tuple(r["refs"]), members,
+    )
+
+
+def _tags_unordered(key):
+    return (*key[:6], tuple(sorted(key[6])), *key[7:])
+
+
+@settings(max_examples=15, deadline=None)
+@given(
+    nodes=st.lists(_NODE, max_size=6),
+    plain_nodes=st.lists(_NODE, max_size=3),
+    ways=st.lists(_WAY, max_size=4),
+    relations=st.lists(_RELATION, max_size=3),
+    block_size=st.integers(1, 4),
+)
+def test_pbf_readers_return_encoded_entities(
+    spark, nodes, plain_nodes, ways, relations, block_size
+):
+    """encode_pbf → read_pbf, format("osmpbf") and decode_primitive_block
+    each return exactly the input: negative ids, ±180/±90 coordinates,
+    10-byte varint deltas, absent Info fields, empty refs and members,
+    "" tag values, and plain (non-dense) nodes."""
+    import os
+    import tempfile
+
+    from osm_poi_database_maker_spark import pbf
+    from osm_poi_database_maker_spark.pbf_datasource import register
+
+    want = sorted(
+        [_entity_key("node", n, dense=True) for n in nodes]
+        + [_entity_key("node", n) for n in plain_nodes]
+        + [_entity_key("way", w) for w in ways]
+        + [_entity_key("relation", r) for r in relations],
+        key=repr,
+    )
+    register(spark)
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "random.osm.pbf")
+        pbf.encode_pbf(path, nodes, ways, relations, block_size=block_size)
+        if plain_nodes:
+            with open(path, "ab") as f:
+                f.write(pbf._enc_blob("OSMData", _plain_node_block(plain_nodes), True))
+
+        direct = []
+        with open(path, "rb") as f:
+            for btype, off, size in pbf.scan_blob_index(path):
+                if btype == "OSMData":
+                    f.seek(off)
+                    raw = pbf.decompress_blob(f.read(size))
+                    direct += map(_decoded_key, pbf.decode_primitive_block(raw))
+        assert sorted(direct, key=repr) == want
+
+        # a collected map's order is Spark's, so compare tags as sets there
+        want = sorted(map(_tags_unordered, want), key=repr)
+        for df in (pbf.read_pbf(spark, path), spark.read.format("osmpbf").load(path)):
+            rows = df.selectExpr("*", "unix_millis(tstamp) AS tstamp_ms").collect()
+            got = [_tags_unordered(_decoded_key(r.asDict())) for r in rows]
+            assert sorted(got, key=repr) == want
