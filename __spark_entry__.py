@@ -31,6 +31,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for each SQL-expressible query; keys absent
-    here get a rows-only check (non-SQL-expressible ops)."""
+    """DuckDB-equivalent SQL for every query in ``queries()`` (tier-1
+    asserts the key sets are equal and value-gates each pair)."""
     return dict(ORACLES)

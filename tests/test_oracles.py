@@ -1,50 +1,33 @@
 """Fast oracle hygiene: every registered DuckDB oracle must plan
-(EXPLAIN) against the smoke fixtures without executing. Catches SQL
-syntax/column drift in seconds; value parity is tools/check.py's job."""
+(EXPLAIN) and bind to HUGEINT-free output against the smoke fixtures
+without executing. Catches SQL syntax/column drift in seconds; value
+parity is tests/test_entry.py::test_query_runs_on_smoke_sf's job."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
+from osm_poi_database_maker_spark.queries import ORACLES
 from tests.conftest import SF_SMOKE
-
-_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from tools.check import duck
 
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    for t in _TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMOKE}/{t}.parquet')"
-        )
-    return c
+    return duck(SF_SMOKE)
 
 
-def _oracles():
-    from osm_poi_database_maker_spark.queries import ORACLES
-
-    return sorted(ORACLES)
-
-
-@pytest.mark.parametrize("name", _oracles())
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_explains(con, name):
-    from osm_poi_database_maker_spark.queries import ORACLES
-
     con.execute(f"EXPLAIN {ORACLES[name]}")
 
 
-@pytest.mark.parametrize("name", _oracles())
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_no_hugeint_output(con, name):
-    """DuckDB types integer sum() as HUGEINT (int128); the driver's
-    pandas-side canonicalizer renders HUGEINT as float64 and the value
-    hash breaks (15.0 vs 15 — the r6 failure class). Binding the oracle
-    and checking output types keeps the class unshippable."""
-    from osm_poi_database_maker_spark.queries import ORACLES
-
+    """DuckDB types integer sum() as HUGEINT (int128); a pandas-side
+    canonicalizer renders HUGEINT as float64 and the value hash breaks
+    (15.0 vs 15). Binding the oracle and checking output types keeps the
+    class unshippable."""
     rel = con.sql(ORACLES[name])
     huge = [
         c

@@ -1,5 +1,5 @@
 """Data-quality operator semantics on planted tables (oracle equivalence
-is covered by tools/check.py / the driver gate)."""
+is gated in tier-1 by tests/test_entry.py::test_query_runs_on_smoke_sf)."""
 
 from __future__ import annotations
 

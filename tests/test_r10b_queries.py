@@ -81,24 +81,6 @@ def test_late_sole_supplier_edge_semantics(spark, tmp_path):
     assert got == [(7, "S7", 1, 1)]
 
 
-def test_late_sole_supplier_oracle_parity_smoke(spark):
-    """Aggregate rewrite (Spark) vs correlated EXISTS/NOT-EXISTS
-    (DuckDB) — two independent algorithms must agree on the fixture."""
-    from osm_poi_database_maker_spark.queries.core import (
-        ORACLE_LATE_SOLE_SUPPLIER,
-        q_late_sole_supplier_orders,
-    )
-
-    got = sorted(tuple(r) for r in q_late_sole_supplier_orders(spark, SF_SMOKE).collect())
-    con = duckdb.connect()
-    for t in ("lineitem", "orders", "supplier"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMOKE}/{t}.parquet')"
-        )
-    want = sorted(tuple(r) for r in con.sql(ORACLE_LATE_SOLE_SUPPLIER).fetchall())
-    assert got == want
-
-
 def test_fleiss_kappa_unanimous_raters(spark, tmp_path):
     """When every document gets a unanimous verdict (some all-keep,
     some all-drop) the observed agreement is 1 and kappa must be

@@ -17,11 +17,9 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_new_registrations_in_window():
+def test_registrations_and_oracle_identities():
     """The r13 registrations stay registered with their contract
-    oracles. (Window-POSITION pins rotate each round — the r13 window
-    head moved to tier 3 when the r14 window landed, so position lives
-    in test_r14_queries; the oracle identities are permanent.)"""
+    oracles."""
     from osm_poi_database_maker_spark import queries as q
 
     assert "doc_ppjoin_collapsed" in q.QUERIES

@@ -137,33 +137,6 @@ def test_stream_reservoir_rocksdb_parity(spark, _rocksdb):
     assert got == _batch(spark) and len(got) > 0
 
 
-def test_stream_reservoir_oracle_verbatim(spark):
-    """The registration contract: the streaming rows hash-match
-    ORACLE_RESERVOIR (the batch oracle, unchanged) on the smoke
-    fixture — the same verbatim-oracle pattern doc_ppjoin_collapsed
-    used in its r12 prep."""
-    import duckdb
-
-    from osm_poi_database_maker_spark.queries.events import ORACLE_RESERVOIR
-    from osm_poi_database_maker_spark.queries.streaming_queries import (
-        q_stream_reservoir_sample,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF_SMOKE}/events.parquet')"
-    )
-    want = sorted(
-        (t, int(rk), int(e), int(u), round(float(v), 9))
-        for t, rk, e, u, v in con.execute(ORACLE_RESERVOIR).fetchall()
-    )
-    got = sorted(
-        (r.event_type, int(r.rk), int(r.event_id), int(r.user_id), round(float(r.value), 9))
-        for r in q_stream_reservoir_sample(spark, SF_SMOKE).collect()
-    )
-    assert got == want
-
-
 # --- streaming weighted E-S sample (second r14-prep twin) -------------------
 
 

@@ -1,5 +1,6 @@
 """Text-analysis operator semantics on planted documents (oracle
-equivalence is covered by tools/check.py / the driver gate)."""
+equivalence is gated in tier-1 by
+tests/test_entry.py::test_query_runs_on_smoke_sf)."""
 
 from __future__ import annotations
 
