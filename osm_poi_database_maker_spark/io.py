@@ -15,7 +15,9 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import stat
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -132,10 +134,45 @@ def session_memo(spark: SparkSession, key: tuple, compute):
     return memo[key]
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for ``spark.sql`` use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+def derived_path(stem: str, *key) -> str:
+    """Location of a file or directory derived from ``key`` (fixture
+    contents, a :func:`fixture_version` token, layout parameters): a
+    content hash, so a different key never reuses an older artefact."""
+    digest = hashlib.sha256(repr(key).encode()).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), f"ospdms_{stem}_{digest}")
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    elif os.path.lexists(path):
+        os.unlink(path)
+
+
+def write_once(path: str, write) -> str:
+    """Publish ``path`` once: ``write(tmp)`` builds the file or directory
+    at a per-process sibling, which then moves into place in one step,
+    so ``path`` is either absent or complete — a failed or crashed write
+    never leaves a partial artefact there. An existing ``path`` is
+    returned as is. When a concurrent writer publishes first, its
+    artefact is kept and ours is dropped: a directory rename fails onto
+    their non-empty directory, and a file is hard-linked, because a file
+    rename would silently replace theirs."""
+    if os.path.exists(path):
+        return path
+    tmp = f"{path}.tmp.{os.getpid()}"
+    _remove(tmp)  # left by a crashed process that had the same pid
+    try:
+        write(tmp)
+        publish = os.rename if os.path.isdir(tmp) else os.link
+        try:
+            publish(tmp, path)
+        except OSError:
+            if not os.path.exists(path):
+                raise
+    finally:
+        _remove(tmp)
+    return path
 
 
 #: Reference filter.py:239 verbatim query contract: first page of 100
@@ -178,23 +215,23 @@ def fetch_taginfo_cache(
 ) -> dict:
     """O15 cache-or-fetch (reference filter.py:281-299): serve an
     existing ``tags.json`` if present, else call TagInfo per key and
-    write the cache in the exact reference shape
+    publish the cache (:func:`write_once`) in the exact reference shape
     ``{"retrieval_date": ..., "data": {key: {value: count}}}`` — the
     shape :func:`taginfo_from_json` reads back into the dimension."""
     import datetime
     import json
 
-    if os.path.exists(path):
-        with open(path) as fh:
-            return json.load(fh)
-    tags = {
-        "retrieval_date": now_iso
-        or datetime.datetime.now().isoformat(timespec="minutes"),
-        "data": {k: retrieve_taginfo(k, http_get) for k in keys},
-    }
-    with open(path, "w") as fh:
-        fh.write(json.dumps(tags))
-    return tags
+    def fetch(tmp: str) -> None:
+        tags = {
+            "retrieval_date": now_iso
+            or datetime.datetime.now().isoformat(timespec="minutes"),
+            "data": {k: retrieve_taginfo(k, http_get) for k in keys},
+        }
+        with open(tmp, "w") as fh:
+            fh.write(json.dumps(tags))
+
+    with open(write_once(path, fetch)) as fh:
+        return json.load(fh)
 
 
 def taginfo_from_json(spark: SparkSession, path: str) -> DataFrame:

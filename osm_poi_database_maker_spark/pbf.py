@@ -856,7 +856,8 @@ def decode_blobs(blobs: Iterable[tuple[str, int, int]]) -> Iterator[pa.RecordBat
 
 def pbf_nodes(spark, path: str):
     """Node projection of :func:`read_pbf` in the :mod:`.osm_source`
-    NODE_SCHEMA_DDL shape (geom_valid mirrors osmium's location check)."""
+    NODE_SCHEMA_DDL shape (geom_valid mirrors osmium's location check:
+    lon within ±180 and lat within ±90)."""
     from pyspark.sql import functions as F
 
     df = read_pbf(spark, path)
@@ -869,7 +870,9 @@ def pbf_nodes(spark, path: str):
         "tags",
         "lon",
         "lat",
-        (F.col("lon").isNotNull() & F.col("lat").isNotNull()).alias("geom_valid"),
+        (
+            F.col("lon").between(-180.0, 180.0) & F.col("lat").between(-90.0, 90.0)
+        ).alias("geom_valid"),
     )
 
 

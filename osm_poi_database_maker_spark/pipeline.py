@@ -56,33 +56,21 @@ def toi_dim_from_cache(spark, path: str, settings: Settings) -> DataFrame:
     return build_toi_dim(raw, settings)
 
 
-def with_progress_counters(df: DataFrame, name: str = "poi_pipeline") -> DataFrame:
-    """O2 (reference logs a counter every 1M objects, filter.py:213-228):
-    zero-cost streaming metrics via ``observe`` — row and distinct-ish
-    counts accumulate during the job (no extra pass, no action) and are
-    read from the observation after any action on the returned frame via
-    ``df.sparkSession`` listeners or `Observation` objects in tests."""
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("rows_seen"),
-        F.approx_count_distinct("id").alias("approx_distinct_ids"),
-    )
-
-
 def cache_toi_dim(taginfo: DataFrame, settings: Settings, path: str) -> DataFrame:
     """O15 (reference filter.py:282-299): the tags.json cache as a
-    poor-man's materialized view — build the TOI dimension once, persist
-    it to parquet, and serve every later run from the cached copy. The
-    dimension is tiny (≤ keys × top-k rows), so the cache is a single
-    file; `coalesce(1)` keeps it one task to write and one to broadcast."""
-    spark = taginfo.sparkSession
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        # overwrite, not error-if-exists: a crashed earlier run can leave
-        # the path present but unreadable, and the rebuild must self-heal
-        build_toi_dim(taginfo, settings).coalesce(1).write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+    poor-man's materialized view — build the TOI dimension once, publish
+    it as parquet (:func:`~osm_poi_database_maker_spark.io.write_once`),
+    and serve every later run from the cached copy; an existing ``path``
+    is only ever read. The dimension is tiny (≤ keys × top-k rows), so
+    the cache is a single file; `coalesce(1)` keeps it one task to write
+    and one to broadcast."""
+    from .io import write_once
+
+    write_once(
+        path,
+        lambda tmp: build_toi_dim(taginfo, settings).coalesce(1).write.parquet(tmp),
+    )
+    return taginfo.sparkSession.read.parquet(path)
 
 
 def route_pois(nodes_out: DataFrame, ways_out: DataFrame) -> DataFrame:

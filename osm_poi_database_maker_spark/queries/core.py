@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import fixture_version, load_table
+from ..io import derived_path, fixture_version, load_table, write_once
 
 
 # --- pricing summary (TPC-H Q1 shape: filter → wide agg) -------------------
@@ -3718,16 +3718,9 @@ _DPP_QUARTER = "1995-Q2"
 
 
 def dpp_layout_path(sf_dir: str) -> str:
-    """Content-fingerprint-keyed location of the month-partitioned orders
-    table (written once per fixture version, atomic rename — same
-    discipline as osm.cell_layout_path)."""
-    import hashlib
-    import os
-    import tempfile
-
-    v = fixture_version(sf_dir, "orders")
-    key = hashlib.sha256(f"{sf_dir}:{v}:dpp1".encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"ospdms_dpp_orders_{key}")
+    """Location of the month-partitioned orders table, one per version
+    of the orders fixture."""
+    return derived_path("dpp_orders", sf_dir, fixture_version(sf_dir, "orders"), "dpp1")
 
 
 def _quarter_months(quarter: str) -> list[str]:
@@ -3753,24 +3746,13 @@ def q_orders_dpp_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap at 100 TB — the fact-side prune rides the dim filter's
     selectivity with zero reads outside the surviving partitions, and
     the broadcast is reused as the pruning subquery (no extra job)."""
-    import os
-
-    path = dpp_layout_path(sf_dir)
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp.{os.getpid()}"
-        (
-            load_table(spark, sf_dir, "orders")
-            .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
-            .write.partitionBy("o_month")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        try:
-            os.rename(tmp, path)
-        except OSError:  # lost a concurrent-writer race: theirs is complete
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
+    path = write_once(
+        dpp_layout_path(sf_dir),
+        lambda tmp: load_table(spark, sf_dir, "orders")
+        .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
+        .write.partitionBy("o_month")
+        .parquet(tmp),
+    )
     months = [
         (f"{y}-{m:02d}", f"{y}-Q{(m - 1) // 3 + 1}")
         for y in range(1992, 1999)
@@ -3811,16 +3793,9 @@ _Z_BITS = 3  # bits per dimension -> 64 z-cells
 
 
 def zorder_layout_path(sf_dir: str) -> str:
-    """Content-fingerprint-keyed location of the Z-order-partitioned
-    lineitem table (same write-once / atomic-rename discipline as
-    dpp_layout_path)."""
-    import hashlib
-    import os
-    import tempfile
-
-    v = fixture_version(sf_dir, "lineitem")
-    key = hashlib.sha256(f"{sf_dir}:{v}:z{_Z_BITS}".encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"ospdms_zorder_li_{key}")
+    """Location of the Z-order-partitioned lineitem table, one per
+    version of the lineitem fixture."""
+    return derived_path("zorder_li", sf_dir, fixture_version(sf_dir, "lineitem"), _Z_BITS)
 
 
 def _z_cell_expr(pc, sc):
@@ -3857,8 +3832,6 @@ def q_lineitem_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     table size. At 100 TB the 3-bit cells become ~10-bit (10⁶ files)
     and the cover computation stays a driver-side loop over the
     query box's cell rectangle."""
-    import os
-
     li = load_table(spark, sf_dir, "lineitem")
     st = li.agg(
         F.min("l_partkey").alias("pmin"),
@@ -3868,25 +3841,16 @@ def q_lineitem_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     n = 1 << _Z_BITS
     pspan, sspan = st.pmax - st.pmin + 1, st.smax - st.smin + 1
-    path = zorder_layout_path(sf_dir)
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp.{os.getpid()}"
-        # integer DIV, never float division: (v-lo)*8/span can land an
-        # ulp under an exact integer and floor into the wrong cell
-        pc = F.expr(f"(l_partkey - {st.pmin}L) * {n} DIV {pspan}L")
-        sc = F.expr(f"(l_suppkey - {st.smin}L) * {n} DIV {sspan}L")
-        (
-            li.withColumn("z_cell", _z_cell_expr(pc, sc))
-            .write.partitionBy("z_cell")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        try:
-            os.rename(tmp, path)
-        except OSError:  # lost a concurrent-writer race: theirs is complete
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
+    # integer DIV, never float division: (v-lo)*8/span can land an
+    # ulp under an exact integer and floor into the wrong cell
+    pc = F.expr(f"(l_partkey - {st.pmin}L) * {n} DIV {pspan}L")
+    sc = F.expr(f"(l_suppkey - {st.smin}L) * {n} DIV {sspan}L")
+    path = write_once(
+        zorder_layout_path(sf_dir),
+        lambda tmp: li.withColumn("z_cell", _z_cell_expr(pc, sc))
+        .write.partitionBy("z_cell")
+        .parquet(tmp),
+    )
     # box = [25%, 45%] of each key range, integer arithmetic (exact in
     # both engines); covering cells = the box's cell rectangle
     p_lo, p_hi = st.pmin + (st.pmax - st.pmin) // 4, st.pmin + 9 * (st.pmax - st.pmin) // 20

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import geo, osm_fixtures as fx
+from ..io import derived_path, write_once
 from ..pipeline import (
     build_toi_dim,
     dedup_latest,
@@ -899,6 +900,27 @@ SELECT id, cluster_id, 'border' FROM border
 # --- O1: native PBF wire-format scan ---------------------------------------
 
 
+# the scan fixtures' contents; 5 is the PBF block_size
+_SCAN_FIXTURE_KEY = (fx.PBF_NODES, fx.PBF_WAYS, fx.PBF_RELATIONS, 5)
+
+
+def _pbf_fixture_file() -> str:
+    """The scan fixture entities as a .osm.pbf file, shared by the two
+    PBF scans."""
+    from .. import pbf
+
+    return write_once(
+        derived_path("pbf_fixture", *_SCAN_FIXTURE_KEY),
+        lambda tmp: pbf.encode_pbf(
+            tmp,
+            nodes=fx.PBF_NODES,
+            ways=fx.PBF_WAYS,
+            relations=fx.PBF_RELATIONS,
+            block_size=5,
+        ),
+    )
+
+
 def q_osm_pbf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end O1: encode the fixture entities to REAL .osm.pbf bytes
     (zlib blobs, DenseNodes delta columns, string tables — pbf.encode_pbf),
@@ -911,23 +933,9 @@ def q_osm_pbf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     block_size=5 forces the fixture across 5 OSMData blobs so the reader
     exercises real multi-blob parallelism, exactly the planet-file shape
     (reference ingests the same format via pyosmium, filter.py:260)."""
-    import os
-    import tempfile
-
     from .. import pbf
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"ospdms_pbf_fixture_{os.getpid()}.osm.pbf"
-    )
-    if not os.path.exists(path):
-        pbf.encode_pbf(
-            path,
-            nodes=fx.PBF_NODES,
-            ways=fx.PBF_WAYS,
-            relations=fx.PBF_RELATIONS,
-            block_size=5,
-        )
-    df = pbf.read_pbf(spark, path)
+    df = pbf.read_pbf(spark, _pbf_fixture_file())
     return _entity_scan_projection(df)
 
 
@@ -940,23 +948,9 @@ def q_osm_pbf_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     differentially verified — so neither path can drift from the wire
     format or from each other. blobspertask=1 makes every blob its own
     InputPartition, the maximal-parallelism planning shape."""
-    import os
-    import tempfile
-
-    from .. import pbf
     from ..pbf_datasource import register
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"ospdms_pbf_fixture_{os.getpid()}.osm.pbf"
-    )
-    if not os.path.exists(path):
-        pbf.encode_pbf(
-            path,
-            nodes=fx.PBF_NODES,
-            ways=fx.PBF_WAYS,
-            relations=fx.PBF_RELATIONS,
-            block_size=5,
-        )
+    path = _pbf_fixture_file()
     register(spark)
     df = spark.read.format("osmpbf").option("blobspertask", "1").load(path)
     return _entity_scan_projection(df)
@@ -970,21 +964,17 @@ def q_osm_xml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     every element across chunk boundaries, so the differential check
     (same oracle literals as osm_pbf_scan) verifies the split logic, the
     entity/attribute parse, and XML escaping end to end."""
-    import os
-    import tempfile
-
     from .. import osm_xml
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"ospdms_xml_fixture_{os.getpid()}.osm"
-    )
-    if not os.path.exists(path):
-        osm_xml.write_osm_xml(
-            path,
+    path = write_once(
+        derived_path("xml_fixture", *_SCAN_FIXTURE_KEY),
+        lambda tmp: osm_xml.write_osm_xml(
+            tmp,
             nodes=fx.PBF_NODES,
             ways=fx.PBF_WAYS,
             relations=fx.PBF_RELATIONS,
-        )
+        ),
+    )
     df = osm_xml.read_osm_xml(spark, path, chunk_bytes=256)
     return _entity_scan_projection(df)
 
@@ -1202,39 +1192,21 @@ def q_osm_poi_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     assembly join/agg (bucketable on node_id/way_id at 100 TB) and the
     broadcast TOI semi-join — the cheap map-side predicates fuse into
     the scan stage."""
-    import hashlib
-    import os
-    import tempfile
-
     from .. import pbf
     from ..ops import tags as tag_ops
     from ..pbf_datasource import register
     from ..pipeline import route_pois
     from ..sink import copy_line
 
-    # Key the fixture file by a content hash (stale files from an older
-    # fixture version can never be reused) and write atomically (encode
-    # to a .tmp, then os.rename) so a crashed partial encode is never
-    # visible at `path`. Local-mode test fixture only: on a real
-    # multi-node cluster this path would live on shared storage
-    # (HDFS/S3), where the same hash-keyed scheme applies.
+    # Local-mode test fixture only: on a real multi-node cluster this
+    # path would live on shared storage (HDFS/S3), keyed the same way.
     nodes_fx, ways_fx = fx.ep1_pbf_nodes(), fx.ep1_pbf_ways()
-    content_key = hashlib.sha256(
-        repr((nodes_fx, ways_fx, 7)).encode()
-    ).hexdigest()[:16]
-    path = os.path.join(
-        tempfile.gettempdir(), f"ospdms_ep1_fixture_{content_key}.osm.pbf"
+    path = write_once(
+        derived_path("ep1_fixture", nodes_fx, ways_fx, 7),
+        lambda tmp: pbf.encode_pbf(
+            tmp, nodes=nodes_fx, ways=ways_fx, relations=[], block_size=7
+        ),
     )
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp.{os.getpid()}"
-        pbf.encode_pbf(
-            tmp,
-            nodes=nodes_fx,
-            ways=ways_fx,
-            relations=[],
-            block_size=7,
-        )
-        os.rename(tmp, path)
     register(spark)
     scan = spark.read.format("osmpbf").option("blobspertask", "1").load(path)
     taginfo = fx.taginfo_df(spark)
@@ -1389,16 +1361,11 @@ _CELL_BBOX = (5.095, 52.095, 5.155, 52.155)
 
 
 def cell_layout_path() -> str:
-    """Content-hash-keyed location of the cell-partitioned POI node
-    table (written once per fixture version, atomic rename)."""
-    import hashlib
-    import os
-    import tempfile
-
+    """Location of the cell-partitioned POI node table, one per fixture
+    version and grid resolution."""
     from ..spatial import GRID_RES
 
-    key = hashlib.sha256(repr((fx.NODES, GRID_RES, 1)).encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"ospdms_cell_layout_{key}")
+    return derived_path("cell_layout", fx.NODES, GRID_RES, 1)
 
 
 def q_osm_cell_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1421,27 +1388,16 @@ def q_osm_cell_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipping via the Z-order sort within partitions
     (layout.cluster_spatially); query cost rides bbox area, not table
     size."""
-    import os
-
     from ..spatial import GRID_RES, cells_for_bbox, grid_cell
 
-    path = cell_layout_path()
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp.{os.getpid()}"
-        (
-            fx.nodes_df(spark)
-            .filter(F.col("lon").isNotNull())
-            .withColumn("cell", grid_cell(F.col("lon"), F.col("lat")))
-            .write.partitionBy("cell")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        try:
-            os.rename(tmp, path)
-        except OSError:  # lost a concurrent-writer race: theirs is complete
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
+    path = write_once(
+        cell_layout_path(),
+        lambda tmp: fx.nodes_df(spark)
+        .filter(F.col("lon").isNotNull())
+        .withColumn("cell", grid_cell(F.col("lon"), F.col("lat")))
+        .write.partitionBy("cell")
+        .parquet(tmp),
+    )
     min_lon, min_lat, max_lon, max_lat = _CELL_BBOX
     cover = cells_for_bbox(min_lon, min_lat, max_lon, max_lat, GRID_RES)
     return (
