@@ -83,6 +83,22 @@ def pick_dest(repo: str) -> str:
     return dest
 
 
+def env_block(spark) -> dict:
+    """The execution environment a run's times belong to: the effective
+    master, parallelism, shuffle partitions, AQE flags and host cores."""
+    sc, conf = spark.sparkContext, spark.conf
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "shuffle_partitions": int(conf.get("spark.sql.shuffle.partitions")),
+        "aqe": conf.get("spark.sql.adaptive.enabled").lower() == "true",
+        "aqe_coalesce": conf.get(
+            "spark.sql.adaptive.coalescePartitions.enabled"
+        ).lower() == "true",
+        "cpu_count": os.cpu_count(),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
@@ -135,6 +151,7 @@ def main() -> None:
         "sf": sf,
         "runs_per_query": n_runs,
         "n_queries": len(timings),
+        "env": env_block(spark),
         "value": total,
     }
     if errors:

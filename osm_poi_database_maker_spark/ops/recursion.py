@@ -1,27 +1,30 @@
-"""Recursive-query surface: transitive closure of functional graphs.
+"""Recursive-query surface: transitive closure of parent graphs.
 
 Spark has no ``WITH RECURSIVE``; this module provides the standard
-substitution for the linear-recursion case (each node has at most one
-parent edge — org charts, referral chains, category trees, Fenwick-style
-aggregation paths): pointer doubling. Where a recursive CTE walks one
-edge per pass (O(depth) sequential joins — at 100 TB depth-30 chains
-mean 30 shuffles), doubling squares the reach every round, so the whole
-closure materializes in ceil(log2(max_depth)) self-joins.
+substitution. Where a recursive CTE walks one edge per pass (O(depth)
+sequential joins — at 100 TB depth-30 chains mean 30 shuffles), both
+loops here double their reach every round, so a closure materializes in
+about log2(max_depth) joins. Each round is one lazily checkpointed frame
+plus ONE 1-row flags job that materializes it and answers "converged?"
+(and, for the functional loop, "cycle?") together.
 
-Round structure (optimization round r14, guide §2.4 "remove shuffles
-outright"): both closures share one semi-naive delta loop. Each round
-composes only the DELTA (pairs new or improved last round) with the
-closure, in both orders, then folds closure ∪ fwd ∪ bwd through ONE
-(node, ancestor) min-aggregation that carries an ``old`` flag column
-(old rows keep their previous dist, composed rows carry NULL), so the
-next delta is ``min(dist) < min(old)`` — a FILTER over the aggregated
-frame instead of the previous implementation's per-round LEFT-ANTI
-join of the full closure against itself (one whole closure-sized
-shuffle removed per round), and the previous ``distinct`` over
-(node, ancestor, dist) triples with per-split-point multiplicity
-(ancestor_closure) collapses into the same aggregation. Convergence
-and the cycle guard ride a 1-row flags aggregate over the lazily
-checkpointed round frame — exactly one job per round.
+Two loops, one per graph shape:
+
+- :func:`ancestor_closure` — functional graphs (each node has at most
+  one parent: org charts, referral chains, category trees). Pointer
+  jumping (Wyllie, 1979) over path arrays: the state is ONE row per
+  node, ``(node, path, done)``, where ``path`` lists the node's first
+  ancestors nearest first. A round joins every unfinished row to the
+  state of the last ancestor on its path and appends that ancestor's
+  path, so path length doubles while a round moves n rows, not the
+  n·depth closure. One ``posexplode`` expands the result at the end.
+- :func:`min_dist_closure` — multi-parent DAGs (BOM graphs, category
+  DAGs), where a pair is reachable along many paths. Semi-naive min
+  doubling over ``(node, ancestor, dist)`` pairs: each round composes
+  only the DELTA (pairs new or improved last round) with the closure,
+  in both orders, and folds closure ∪ fwd ∪ bwd through one
+  (node, ancestor) min-aggregation carrying an ``old`` flag column, so
+  the next delta is a FILTER over the aggregated frame.
 """
 
 from __future__ import annotations
@@ -30,46 +33,108 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _doubling_closure(
-    edges: DataFrame,
-    max_rounds: int,
-    detect_cycles: bool,
-    caller: str,
-    dedup_edges: bool = True,
-) -> DataFrame:
-    """Shared semi-naive pointer-doubling loop over ``(node, anc)`` edges.
+def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
+    """Full ancestor closure of a functional parent graph.
 
-    Returns ``(node, ancestor, dist)`` with dist = the MINIMUM edge count
-    over all paths. Invariant: after round k every pair whose shortest
-    distance is ≤ 2^k carries that exact distance — split a shortest path
-    at its midpoint: both halves are shortest paths of length ≤ 2^(k-1),
-    exact by induction; the composition records their sum, and min() can
-    keep no overestimate because every recorded dist is a realizable path
+    Input: ``(node, anc)`` — one parent edge per non-root node; the
+    graph must be acyclic. Output: ``(node, ancestor, dist)`` — every
+    ancestor of every node with its path length, exactly the rows a
+    linear recursive CTE produces.
+
+    Invariant: at the start of round k every unfinished row holds its
+    first 2^(k-1) ancestors, and so does the ancestor it joins to
+    unless that one is done (its path is then complete). A row is done
+    when the joined ancestor is a root (it has no row) or is itself
+    done. A node at depth d ≤ 2^max_rounds is done within
+    ``max_rounds + 1`` rounds. A cycle never reaches a root; once the
+    paths are as long as the cycle some path holds its own node, which
+    the flags job reports and the loop raises on.
+    """
+    state = edges.select(
+        F.col("node").cast("long").alias("node"),
+        F.array(F.col("anc").cast("long")).alias("path"),
+        F.lit(False).alias("done"),
+    ).localCheckpoint(eager=False)
+    for _ in range(max_rounds + 1):
+        s, t = state.filter(~F.col("done")).alias("s"), state.alias("t")
+        root = F.col("t.node").isNull()
+        jumped = s.join(
+            t, F.element_at(F.col("s.path"), -1) == F.col("t.node"), "left"
+        ).select(
+            F.col("s.node").alias("node"),
+            F.when(root, F.col("s.path"))
+            .otherwise(F.concat(F.col("s.path"), F.col("t.path")))
+            .alias("path"),
+            (root | F.col("t.done")).alias("done"),
+        )
+        state = (
+            state.filter(F.col("done"))
+            .unionByName(jumped)
+            .localCheckpoint(eager=False)
+        )
+        flags = state.agg(
+            F.min(F.col("done").cast("int")).alias("all_done"),
+            F.max(F.array_contains("path", F.col("node")).cast("int")).alias(
+                "any_self"
+            ),
+        ).collect()[0]
+        if flags["any_self"]:
+            raise RuntimeError(
+                "ancestor_closure did not converge: cyclic input "
+                "(a node is its own ancestor)"
+            )
+        if flags["all_done"] is None or flags["all_done"]:
+            return state.select(
+                "node", F.posexplode("path").alias("pos", "ancestor")
+            ).select(
+                "node",
+                "ancestor",
+                (F.col("pos") + 1).cast("long").alias("dist"),
+            )
+    raise RuntimeError(
+        f"ancestor_closure did not converge in {max_rounds} pointer-jumping "
+        f"rounds (depth > {2 ** max_rounds}): pathological hierarchy"
+    )
+
+
+def min_dist_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
+    """Shortest-distance closure of a multi-parent DAG — the
+    non-functional-graph recursion case (BOM graphs, category DAGs,
+    citation ancestries, where a node has SEVERAL parent edges and a
+    pair is reachable along many paths of different lengths).
+
+    Input: ``(node, anc)`` parent edges (repeats allowed). Output:
+    ``(node, ancestor, dist)`` with dist = the MINIMUM edge count over
+    all paths — exactly the rows a recursive CTE plus
+    ``GROUP BY node, ancestor → min(dist)`` produces. CYCLES are
+    well-defined here: min() gives the doubling a true fixpoint
+    (shortest-WALK distances, finite for every reachable pair), so a
+    cycle of length L simply yields ``(n, n, L)`` self-rows instead of
+    diverging — a recursive CTE needs an explicit depth guard for the
+    same input.
+
+    Invariant: after round k every pair whose shortest distance is
+    ≤ 2^k carries that exact distance — split a shortest path at its
+    midpoint: both halves are shortest paths of length ≤ 2^(k-1), exact
+    by induction; the composition records their sum, and min() can keep
+    no overestimate because every recorded dist is a realizable path
     length. Completeness of the delta composition: any shortest path of
     length ≤ 2^(k+1) splits into two exact halves ≤ 2^k, and if both
     halves were already exact a round earlier their composition was
-    produced then — so at least one half sits in the delta.
-
-    ``detect_cycles`` raises the moment any self-pair (node == ancestor)
-    materializes — a node is self-reachable iff the graph has a cycle,
-    so this is the exact acyclicity guard (and fires in O(log cycle-len)
-    rounds instead of only at ``max_rounds`` exhaustion).
+    produced then — so at least one half sits in the delta. Detecting
+    convergence costs one extra no-change round, so the loop runs
+    ``max_rounds + 1`` iterations.
     """
-    closure = edges.select(
-        F.col("node").cast("long").alias("node"),
-        F.col("anc").cast("long").alias("ancestor"),
-        F.lit(1).cast("long").alias("dist"),
+    closure = (
+        edges.select(
+            F.col("node").cast("long").alias("node"),
+            F.col("anc").cast("long").alias("ancestor"),
+            F.lit(1).cast("long").alias("dist"),
+        )
+        .groupBy("node", "ancestor")
+        .agg(F.min("dist").alias("dist"))
+        .localCheckpoint(eager=False)
     )
-    if dedup_edges:
-        # multi-parent inputs may repeat (node, anc); a functional graph
-        # (ancestor_closure's contract: ≤ 1 parent edge per node) cannot,
-        # so its caller skips this shuffle (r14, guide §2.1)
-        closure = closure.groupBy("node", "ancestor").agg(F.min("dist").alias("dist"))
-    closure = closure.localCheckpoint(eager=False)
-    # Self-loop edges (the cycle the delta loop's improvements would
-    # never flag) surface as (n, n, 1) rows of round 0's aggregated
-    # frame, so the `any_self` flag below catches them — no upfront
-    # probe job (r14: one job per closure query removed).
     delta = closure
     improved = F.col("old").isNull() | (F.col("dist") < F.col("old"))
     for rnd in range(max_rounds + 1):
@@ -98,70 +163,14 @@ def _doubling_closure(
             .agg(F.min("dist").alias("dist"), F.min("old").alias("old"))
             .localCheckpoint(eager=False)
         )
-        # one job: materializes the round's frame AND answers both
-        # "anything new/improved?" and "any self-pair?" (cycle guard)
-        flags = allc.agg(
-            F.max(improved.cast("int")).alias("any_new"),
-            F.max((F.col("node") == F.col("ancestor")).cast("int")).alias(
-                "any_self"
-            ),
-        ).collect()[0]
+        # one job: materializes the round's frame and answers
+        # "anything new/improved?"
+        any_new = allc.agg(F.max(improved.cast("int"))).collect()[0][0]
         closure = allc.select("node", "ancestor", "dist")
         delta = allc.filter(improved).select("node", "ancestor", "dist")
-        if detect_cycles and flags["any_self"]:
-            raise RuntimeError(
-                f"{caller} did not converge: cyclic input "
-                "(a node is reachable from itself)"
-            )
-        if not flags["any_new"]:
+        if not any_new:
             return closure
     raise RuntimeError(
-        f"{caller} did not converge in {max_rounds} doubling rounds "
+        f"min_dist_closure did not converge in {max_rounds} doubling rounds "
         f"(depth > {2 ** max_rounds}): pathological hierarchy"
-    )
-
-
-def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
-    """Full ancestor closure of a functional parent graph.
-
-    Input: ``(node, anc)`` — one parent edge per non-root node; the
-    graph must be acyclic (a cycle raises — detected exactly via
-    self-reachability, see :func:`_doubling_closure`). Output:
-    ``(node, ancestor, dist)`` — every ancestor of every node with its
-    path length, exactly the rows a linear recursive CTE produces: in a
-    functional graph each (node, ancestor) pair has exactly ONE path,
-    so the shared min-dist loop's minimum IS that unique path length.
-    ``max_rounds = 12`` covers depth 4096; detecting convergence costs
-    one extra no-change round, so the loop runs ``max_rounds + 1``
-    iterations.
-    """
-    return _doubling_closure(
-        edges,
-        max_rounds,
-        detect_cycles=True,
-        caller="ancestor_closure",
-        # functional graph: ≤ 1 parent edge per node, so (node, anc)
-        # pairs are unique by contract — no dedup shuffle needed
-        dedup_edges=False,
-    )
-
-
-def min_dist_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
-    """Shortest-distance closure of a multi-parent DAG — the
-    non-functional-graph recursion case (BOM graphs, category DAGs,
-    citation ancestries, where a node has SEVERAL parent edges and a
-    pair is reachable along many paths of different lengths).
-
-    Input: ``(node, anc)`` distinct parent edges. Output:
-    ``(node, ancestor, dist)`` with dist = the MINIMUM edge count over
-    all paths — exactly the rows a recursive CTE plus
-    ``GROUP BY node, ancestor → min(dist)`` produces. Unlike
-    :func:`ancestor_closure`, CYCLES are well-defined here: min() gives
-    the doubling a true fixpoint (shortest-WALK distances, finite for
-    every reachable pair), so a cycle of length L simply yields
-    ``(n, n, L)`` self-rows instead of diverging — a recursive CTE
-    needs an explicit depth guard for the same input.
-    """
-    return _doubling_closure(
-        edges, max_rounds, detect_cycles=False, caller="min_dist_closure"
     )

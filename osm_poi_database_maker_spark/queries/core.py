@@ -698,10 +698,12 @@ def q_customer_referral_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~ln(n) (max ~e·ln n), irregular per node — the closure genuinely
     traverses, it is not closed-form.
 
-    Spark side: ops.recursion.ancestor_closure pointer doubling —
-    ceil(log2(depth)) self-join rounds, each one shuffle + distinct,
-    vs the oracle's O(depth) sequential recursive-CTE passes; at a
-    1e9-customer scale that is ~5 shuffles instead of ~30."""
+    Spark side: ops.recursion.ancestor_closure pointer jumping — one
+    row per customer carrying its ancestor path, about log2(depth)
+    rounds, each one join of the unfinished rows to the n-row state,
+    then one posexplode into (node, ancestor, dist); vs the oracle's
+    O(depth) sequential recursive-CTE passes. At a 1e9-customer scale
+    that is ~5 n-row shuffles instead of ~30."""
     from ..ops.recursion import ancestor_closure
     from .curation import _lehmer_h
 
@@ -734,7 +736,7 @@ SELECT node, ancestor, dist FROM anc
 def q_customer_dag_min_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shortest-path closure of a multi-parent DAG — the recursion case
     ``customer_referral_closure`` does NOT cover: there each node has
-    one parent edge, so the closure dedups with distinct; here every
+    one parent edge, so every pair has exactly one path; here every
     customer key ≥ 2 carries TWO derived parent edges (⌊k/2⌋ and ⌊k/3⌋,
     both strictly smaller, so the graph is acyclic by construction and
     pairs are reachable along many paths of different lengths), and the

@@ -701,6 +701,7 @@ def q_stream_cdc_latest_state(
     key range and rewrites only touched partitions, or swaps in a
     transactional table format — documented in merge_upsert."""
     import os
+    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
@@ -731,23 +732,28 @@ def q_stream_cdc_latest_state(
             version_cols=("ts", "event_id"),
         )
 
-    q = (
-        S.stream_events(spark, sf_dir, _max_files_per_trigger)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_cdc_latest_state did not finish within 300s")
-    return spark.read.parquet(target).select(
-        "user_id",
-        F.col("event_id").alias("last_event_id"),
-        F.unix_micros("ts").alias("last_ts_us"),
-        F.col("event_type").alias("last_event_type"),
-        F.round("value", 2).alias("last_value"),
-    )
+    try:
+        q = (
+            S.stream_events(spark, sf_dir, _max_files_per_trigger)
+            .writeStream.foreachBatch(_apply)
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError("stream_cdc_latest_state did not finish within 300s")
+        # the key-sized final state lives on in executor blocks, so the
+        # MERGE target and the stream checkpoint can go with the root
+        return spark.read.parquet(target).select(
+            "user_id",
+            F.col("event_id").alias("last_event_id"),
+            F.unix_micros("ts").alias("last_ts_us"),
+            F.col("event_type").alias("last_event_type"),
+            F.round("value", 2).alias("last_value"),
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 ORACLE_CDC_LATEST = """

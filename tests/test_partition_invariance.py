@@ -49,3 +49,38 @@ def test_result_invariant_to_shuffle_partitions(spark, name):
     finally:
         spark.conf.set(key, had)
     assert low == high and len(low) > 0
+
+
+_CLOSURES = [
+    "customer_referral_closure",
+    "customer_referral_rollup",
+    "customer_dag_min_paths",
+]
+_LAYOUTS = {
+    "partitions_1": {"spark.sql.shuffle.partitions": "1"},
+    "partitions_7": {"spark.sql.shuffle.partitions": "7"},
+    "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+}
+
+
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+@pytest.mark.parametrize("name", _CLOSURES)
+def test_closures_match_oracle_under_layouts(spark, name, layout):
+    """The iterative closures checkpoint and join once per round, so the
+    partitioning of every round's frame changes with the layout; each
+    layout's result must still value-match the DuckDB oracle."""
+    import __spark_entry__ as entrymod
+    from tools.check import compare, duck
+
+    conf = _LAYOUTS[layout]
+    had = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        df = entrymod.queries()[name](spark, SF_SMOKE)
+        rows = [tuple(r) for r in df.collect()]
+    finally:
+        for k, v in had.items():
+            spark.conf.set(k, v)
+    con = duck(SF_SMOKE)
+    assert compare(df.columns, rows, con.sql(entrymod.oracle_sql()[name])) == []

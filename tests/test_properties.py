@@ -6,6 +6,7 @@ from __future__ import annotations
 import struct
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -770,3 +771,94 @@ def test_pbf_readers_return_encoded_entities(
             rows = df.selectExpr("*", "unix_millis(tstamp) AS tstamp_ms").collect()
             got = [_tags_unordered(_decoded_key(r.asDict())) for r in rows]
             assert sorted(got, key=repr) == want
+
+
+# --- recursive closures: pointer jumping and min doubling vs a parent walk --
+
+# chain depths 2^k - 1, 2^k and 2^k + 1 for k ≤ 4: the doubling boundaries
+_CHAIN_DEPTHS = sorted({d for k in range(5) for d in (2**k - 1, 2**k, 2**k + 1)})
+
+
+@st.composite
+def _forests(draw) -> dict[int, int]:
+    """Parent map of a random forest packed into one id space: a random
+    recursive forest (each node's parent is an earlier node or nothing,
+    so several roots) plus chains of boundary depths, relabelled by a
+    random permutation so ids carry no depth order."""
+    parent: dict[int, int] = {}
+    n = draw(st.integers(1, 24))
+    for i in range(1, n):
+        p = draw(st.integers(-1, i - 1))  # -1: i is another root
+        if p >= 0:
+            parent[i] = p
+    for d in draw(st.lists(st.sampled_from(_CHAIN_DEPTHS), min_size=1, max_size=4)):
+        for j in range(d):
+            parent[n + j + 1] = n + j
+        n += d + 1
+    ids = draw(st.permutations(range(n)))
+    return {ids[c]: ids[p] for c, p in parent.items()}
+
+
+def _walk_closure(parent: dict[int, int]) -> set[tuple[int, int, int]]:
+    """Brute force: walk every node's parent chain up to its root."""
+    out = set()
+    for node in parent:
+        anc, dist = parent[node], 1
+        while True:
+            out.add((node, anc, dist))
+            if anc not in parent:
+                break
+            anc, dist = parent[anc], dist + 1
+    return out
+
+
+def _edges(spark, pairs):
+    return spark.createDataFrame(list(pairs), "node long, anc long")
+
+
+def _rows(df) -> set[tuple[int, int, int]]:
+    return {(r.node, r.ancestor, r.dist) for r in df.collect()}
+
+
+@settings(max_examples=5, deadline=None)
+@given(_forests())
+def test_closures_match_parent_walk(spark, parent):
+    """On a functional graph the pointer-jumping ancestor closure, the
+    min-distance doubling closure and a parent walk give the same
+    (node, ancestor, dist) rows."""
+    from osm_poi_database_maker_spark.ops.recursion import (
+        ancestor_closure,
+        min_dist_closure,
+    )
+
+    edges = _edges(spark, parent.items())
+    want = _walk_closure(parent)
+    assert _rows(ancestor_closure(edges)) == want
+    assert _rows(min_dist_closure(edges)) == want
+
+
+@pytest.mark.parametrize("k", range(5))
+def test_ancestor_closure_converges_at_depth_pow2(spark, k):
+    """Depth exactly 2^max_rounds converges."""
+    from osm_poi_database_maker_spark.ops.recursion import ancestor_closure
+
+    parent = {i + 1: i for i in range(2**k)}
+    got = _rows(ancestor_closure(_edges(spark, parent.items()), max_rounds=k))
+    assert got == _walk_closure(parent)
+
+
+@pytest.mark.parametrize(
+    "pairs, max_rounds",
+    [
+        ([(1, 1), (3, 2)], 12),  # self-loop beside a valid edge
+        ([(1, 2), (2, 1)], 12),  # 2-cycle
+        ([(7, 6), (6, 5), (5, 1), (1, 2), (2, 3), (3, 1)], 12),  # tail into a cycle
+        ([(i + 1, i) for i in range(8)], 1),  # depth 8 needs 4 of the 2 rounds
+    ],
+    ids=["self_loop", "two_cycle", "tail_into_cycle", "too_deep"],
+)
+def test_ancestor_closure_raises_when_not_converging(spark, pairs, max_rounds):
+    from osm_poi_database_maker_spark.ops.recursion import ancestor_closure
+
+    with pytest.raises(RuntimeError, match="did not converge"):
+        ancestor_closure(_edges(spark, pairs), max_rounds=max_rounds).collect()

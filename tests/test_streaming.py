@@ -906,3 +906,19 @@ def test_kmv_rolling_stamp_multibatch_replay(spark, tmp_path):
     ref = {r["day"]: tuple(r["minima"]) for r in spark.table(ref_name).collect()}
     newest = {day: max(ems)[1] for day, ems in per_day.items()}
     assert newest == ref, "newest-wins multi-batch minima diverge from single-batch"
+
+
+def test_cdc_latest_state_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
+    """The CDC query's MERGE target and stream checkpoint live in a
+    private temp root; the returned state must not depend on it, and
+    nothing of it may outlive the call."""
+    import tempfile
+
+    from osm_poi_database_maker_spark.queries.streaming_queries import (
+        q_stream_cdc_latest_state,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = q_stream_cdc_latest_state(spark, SF_SMOKE).collect()
+    assert rows
+    assert not list(tmp_path.glob("ospdms_cdc_*"))
