@@ -55,6 +55,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .ops.recursion import fixpoint
+
 HASH_COUNT = 64
 DEFAULT_BANDS = 16  # 16 bands × 4 rows: catches jaccard ≳ 0.3 reliably
 
@@ -662,8 +664,10 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     node ids inside the component (min() of reachable ids), so the
     jump join always finds its target row. The edge list is
     block-materialized once (localCheckpoint) so rounds don't recompute
-    the pair generator; ``max_iters`` remains the runaway guard and a
-    non-converged run still raises rather than returning bad labels."""
+    the pair generator. The rounds run on ``ops.recursion.fixpoint``:
+    each round's ``__chg`` flag (some label dropped) is observed by the
+    job that materialises the round, and ``max_iters`` is its round cap,
+    so a non-converged run raises rather than returning bad labels."""
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
@@ -672,12 +676,8 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # round 0 folded into initialization: label = min(self, direct
-    # neighbors) — saves one full propagation round (and its checkpoint)
-    labels = edges.groupBy(F.col("src").alias("doc_id")).agg(
-        F.least(F.col("src"), F.min("dst")).alias("label")
-    )
-    for _ in range(max_iters):
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr = (
             edges.join(labels, edges.src == labels.doc_id)
             .groupBy(F.col("dst").alias("doc_id"))
@@ -688,15 +688,14 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         jump = labels.select(
             F.col("doc_id").alias("__jn"), F.col("label").alias("jump_min")
         )
-        # the changed flag rides along in the same joins that compute the
-        # new label, so the convergence probe is a filter over the
-        # materialized checkpoint instead of an extra join per round
         cand = F.least(
             F.col("label"),
             F.coalesce("nbr_min", F.col("label")),
             F.coalesce("jump_min", F.col("label")),
         )
-        new_labels = (
+        # the changed flag rides along in the same joins that compute
+        # the new label, so the convergence probe needs no extra join
+        return (
             labels.join(nbr, "doc_id", "left")
             .join(jump, labels.label == F.col("__jn"), "left")
             .select(
@@ -704,28 +703,20 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
                 cand.alias("label"),
                 (cand < F.col("label")).alias("__chg"),
             )
-            # lazy checkpoint + one full-scan aggregate: the SAME job
-            # materializes the round's frame (cutting lineage) AND
-            # answers the convergence probe — one job per round instead
-            # of the former eager-checkpoint job plus a count job (r14,
-            # the ops/recursion.py flags pattern)
-            .localCheckpoint(eager=False)
         )
-        changed = new_labels.agg(
-            F.max(F.col("__chg").cast("int")).alias("c")
-        ).collect()[0]["c"]
-        labels = new_labels.drop("__chg")
-        if not changed:
-            break
-    else:
-        # exhausting max_iters without a fixpoint means labels (and the
-        # keep flags derived from them) are WRONG for any component whose
-        # diameter exceeds the cap — fail loudly, never return bad
-        # clusters silently
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iters} iterations; "
-            "a component's diameter exceeds the cap — raise max_iters"
-        )
+
+    # round 0 folded into initialization: label = min(self, direct
+    # neighbors) — saves one full propagation round (and its checkpoint)
+    labels = fixpoint(
+        edges.groupBy(F.col("src").alias("doc_id")).agg(
+            F.least(F.col("src"), F.min("dst")).alias("label")
+        ),
+        step,
+        [F.max(F.col("__chg").cast("int")).alias("changed")],
+        lambda m: not m["changed"],
+        max_iters,
+        "dedup_clusters",
+    )
     return labels.select(
         "doc_id",
         F.col("label").alias("cluster_id"),

@@ -1,14 +1,19 @@
-"""Recursive-query surface: transitive closure of parent graphs.
+"""Recursive-query surface: one fixpoint loop, and the transitive
+closures of parent graphs built on it.
 
 Spark has no ``WITH RECURSIVE``; this module provides the standard
-substitution. Where a recursive CTE walks one edge per pass (O(depth)
-sequential joins — at 100 TB depth-30 chains mean 30 shuffles), both
-loops here double their reach every round, so a closure materializes in
-about log2(max_depth) joins. Each round is one lazily checkpointed frame
-plus ONE 1-row flags job that materializes it and answers "converged?"
-(and, for the functional loop, "cycle?") together.
+substitution. :func:`fixpoint` is the one converge-or-raise round loop
+of the package: each round is one lazily checkpointed frame,
+materialised by ONE job whose ``DataFrame.observe`` metrics answer
+"converged?" (and, for the functional closure, "cycle?"), under a round
+cap that raises "did not converge". The closures here, the dedup
+connected components (``dedup.dedup_clusters``) and the k-core peel
+(``queries/dedup.q_doc_graph_kcore``) all run on it.
 
-Two loops, one per graph shape:
+Where a recursive CTE walks one edge per pass (O(depth) sequential
+joins — at 100 TB depth-30 chains mean 30 shuffles), both closures
+double their reach every round, so a closure materializes in about
+log2(max_depth) joins. Two closures, one per graph shape:
 
 - :func:`ancestor_closure` — functional graphs (each node has at most
   one parent: org charts, referral chains, category trees). Pointer
@@ -25,12 +30,50 @@ Two loops, one per graph shape:
   in both orders, and folds closure ∪ fwd ∪ bwd through one
   (node, ancestor) min-aggregation carrying an ``old`` flag column, so
   the next delta is a FILTER over the aggregated frame.
+
+Fixed-count loops (pagerank, BPE merges, k-means, farthest-point
+sampling) run a set number of rounds with no convergence flag, so they
+unroll their own rounds instead of going through :func:`fixpoint`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    flags: Sequence[Column],
+    done: Callable[[dict], bool],
+    max_rounds: int,
+    what: str,
+) -> DataFrame:
+    """Iterate ``state = step(state)`` until ``done`` holds; return the
+    final state.
+
+    Each round's frame is checkpointed lazily and materialised by one
+    noop write that carries ``flags`` (named aggregate columns over the
+    round's rows) as ``DataFrame.observe`` metrics, so the job that
+    computes the round also computes its convergence flags, and the
+    next round reads the checkpoint instead of re-running the lineage.
+    ``done`` gets that round's metrics as a dict (an aggregate over no
+    rows gives its empty value, e.g. ``None`` for min/max) and may
+    raise. Rounds past ``max_rounds`` would only hide a non-converging
+    input, so exhausting the cap raises ``RuntimeError``."""
+    for _ in range(max_rounds):
+        state = step(state).localCheckpoint(eager=False)
+        obs = Observation()
+        state.observe(obs, *flags).write.format("noop").mode("overwrite").save()
+        if done(obs.get):
+            return state
+    raise RuntimeError(
+        f"{what} did not converge in {max_rounds} rounds: the input needs "
+        "more rounds than the cap, or has no fixed point"
+    )
 
 
 def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
@@ -48,14 +91,10 @@ def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
     done. A node at depth d ≤ 2^max_rounds is done within
     ``max_rounds + 1`` rounds. A cycle never reaches a root; once the
     paths are as long as the cycle some path holds its own node, which
-    the flags job reports and the loop raises on.
+    the round's ``any_self`` flag reports and the loop raises on.
     """
-    state = edges.select(
-        F.col("node").cast("long").alias("node"),
-        F.array(F.col("anc").cast("long")).alias("path"),
-        F.lit(False).alias("done"),
-    ).localCheckpoint(eager=False)
-    for _ in range(max_rounds + 1):
+
+    def step(state: DataFrame) -> DataFrame:
         s, t = state.filter(~F.col("done")).alias("s"), state.alias("t")
         root = F.col("t.node").isNull()
         jumped = s.join(
@@ -67,33 +106,39 @@ def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
             .alias("path"),
             (root | F.col("t.done")).alias("done"),
         )
-        state = (
-            state.filter(F.col("done"))
-            .unionByName(jumped)
-            .localCheckpoint(eager=False)
-        )
-        flags = state.agg(
-            F.min(F.col("done").cast("int")).alias("all_done"),
-            F.max(F.array_contains("path", F.col("node")).cast("int")).alias(
-                "any_self"
-            ),
-        ).collect()[0]
-        if flags["any_self"]:
+        return state.filter(F.col("done")).unionByName(jumped)
+
+    def done(m: dict) -> bool:
+        if m["any_self"]:
             raise RuntimeError(
                 "ancestor_closure did not converge: cyclic input "
                 "(a node is its own ancestor)"
             )
-        if flags["all_done"] is None or flags["all_done"]:
-            return state.select(
-                "node", F.posexplode("path").alias("pos", "ancestor")
-            ).select(
-                "node",
-                "ancestor",
-                (F.col("pos") + 1).cast("long").alias("dist"),
-            )
-    raise RuntimeError(
-        f"ancestor_closure did not converge in {max_rounds} pointer-jumping "
-        f"rounds (depth > {2 ** max_rounds}): pathological hierarchy"
+        return m["all_done"] is None or m["all_done"] == 1
+
+    state = fixpoint(
+        edges.select(
+            F.col("node").cast("long").alias("node"),
+            F.array(F.col("anc").cast("long")).alias("path"),
+            F.lit(False).alias("done"),
+        ).localCheckpoint(eager=False),
+        step,
+        [
+            F.min(F.col("done").cast("int")).alias("all_done"),
+            F.max(F.array_contains("path", F.col("node")).cast("int")).alias(
+                "any_self"
+            ),
+        ],
+        done,
+        max_rounds + 1,
+        "ancestor_closure",
+    )
+    return state.select(
+        "node", F.posexplode("path").alias("pos", "ancestor")
+    ).select(
+        "node",
+        "ancestor",
+        (F.col("pos") + 1).cast("long").alias("dist"),
     )
 
 
@@ -123,8 +168,43 @@ def min_dist_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
     halves were already exact a round earlier their composition was
     produced then — so at least one half sits in the delta. Detecting
     convergence costs one extra no-change round, so the loop runs
-    ``max_rounds + 1`` iterations.
+    ``max_rounds + 1`` rounds.
     """
+    improved = F.col("old").isNull() | (F.col("dist") < F.col("old"))
+
+    def step(state: DataFrame) -> DataFrame:
+        closure = state.select("node", "ancestor", "dist")
+        # the first round's state has no ``old`` column: every pair is
+        # new, so delta == closure and the two composition orders
+        # produce identical row sets — one join suffices
+        first = "old" not in state.columns
+        delta = (
+            closure
+            if first
+            else state.filter(improved).select("node", "ancestor", "dist")
+        )
+        x, y = delta.alias("x"), closure.alias("y")
+        cand = x.join(y, F.col("x.ancestor") == F.col("y.node")).select(
+            F.col("x.node").alias("node"),
+            F.col("y.ancestor").alias("ancestor"),
+            (F.col("x.dist") + F.col("y.dist")).alias("dist"),
+        )
+        if not first:
+            p, q = closure.alias("p"), delta.alias("q")
+            cand = cand.unionByName(
+                p.join(q, F.col("p.ancestor") == F.col("q.node")).select(
+                    F.col("p.node").alias("node"),
+                    F.col("q.ancestor").alias("ancestor"),
+                    (F.col("p.dist") + F.col("q.dist")).alias("dist"),
+                )
+            )
+        return (
+            closure.withColumn("old", F.col("dist"))
+            .unionByName(cand.withColumn("old", F.lit(None).cast("long")))
+            .groupBy("node", "ancestor")
+            .agg(F.min("dist").alias("dist"), F.min("old").alias("old"))
+        )
+
     closure = (
         edges.select(
             F.col("node").cast("long").alias("node"),
@@ -135,42 +215,11 @@ def min_dist_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
         .agg(F.min("dist").alias("dist"))
         .localCheckpoint(eager=False)
     )
-    delta = closure
-    improved = F.col("old").isNull() | (F.col("dist") < F.col("old"))
-    for rnd in range(max_rounds + 1):
-        x, y = delta.alias("x"), closure.alias("y")
-        fwd = x.join(y, F.col("x.ancestor") == F.col("y.node")).select(
-            F.col("x.node").alias("node"),
-            F.col("y.ancestor").alias("ancestor"),
-            (F.col("x.dist") + F.col("y.dist")).alias("dist"),
-        )
-        if rnd == 0:
-            # round 1 has delta == closure, so the two composition
-            # orders produce identical row sets — one join suffices
-            cand = fwd
-        else:
-            p, q = closure.alias("p"), delta.alias("q")
-            bwd = p.join(q, F.col("p.ancestor") == F.col("q.node")).select(
-                F.col("p.node").alias("node"),
-                F.col("q.ancestor").alias("ancestor"),
-                (F.col("p.dist") + F.col("q.dist")).alias("dist"),
-            )
-            cand = fwd.unionByName(bwd)
-        allc = (
-            closure.withColumn("old", F.col("dist"))
-            .unionByName(cand.withColumn("old", F.lit(None).cast("long")))
-            .groupBy("node", "ancestor")
-            .agg(F.min("dist").alias("dist"), F.min("old").alias("old"))
-            .localCheckpoint(eager=False)
-        )
-        # one job: materializes the round's frame and answers
-        # "anything new/improved?"
-        any_new = allc.agg(F.max(improved.cast("int"))).collect()[0][0]
-        closure = allc.select("node", "ancestor", "dist")
-        delta = allc.filter(improved).select("node", "ancestor", "dist")
-        if not any_new:
-            return closure
-    raise RuntimeError(
-        f"min_dist_closure did not converge in {max_rounds} doubling rounds "
-        f"(depth > {2 ** max_rounds}): pathological hierarchy"
-    )
+    return fixpoint(
+        closure,
+        step,
+        [F.max(improved.cast("int")).alias("any_new")],
+        lambda m: not m["any_new"],
+        max_rounds + 1,
+        "min_dist_closure",
+    ).select("node", "ancestor", "dist")

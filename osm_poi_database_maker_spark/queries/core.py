@@ -459,51 +459,44 @@ def q_orders_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-located equi-join over BUCKETED at-rest tables — the planner
     analogue of osm_cell_layout_scan for the join side (reference: the
     `way_nodes ⨝ nodes` assembly pattern; O10/O20 at 100 TB): orders
-    and customer are written once bucketBy(16, custkey) + sortBy
-    (bucket metadata in the catalog, data under /tmp keyed by the
-    source file's content fingerprint), and the join then runs with
-    ZERO Exchange before the SortMergeJoin — the shuffle was paid at
-    write time and is amortized over every subsequent join
-    (tests/test_skew.py pins the no-Exchange plan; PLANS.md shows it).
-    The DuckDB oracle computes the plain join over the raw parquet, so
-    the bucketed path is also gated for semantic neutrality."""
-    import hashlib
+    and customer are written once bucketBy(16, custkey) + sortBy at an
+    ``io.derived_path`` keyed by the source table's fixture version,
+    and each session registers them in its catalog as external bucketed
+    tables over those files, so no process ever rewrites or deletes
+    another's live table. The join then runs with ZERO Exchange before
+    the SortMergeJoin — the shuffle was paid at write time and is
+    amortized over every subsequent join (tests/test_skew.py pins the
+    no-Exchange plan; PLANS.md shows it). The DuckDB oracle computes
+    the plain join over the raw parquet, so the bucketed path is also
+    gated for semantic neutrality."""
     import os
-    import shutil
 
     from ..ops.skew import write_bucketed
 
-    def fingerprint(name: str) -> str:
-        v = fixture_version(sf_dir, name)
-        return hashlib.sha256(f"{sf_dir}:{v}".encode()).hexdigest()[:12]
-
-    def ensure(table: str, df: "DataFrame", key: str) -> None:
+    def ensure(name: str, key: str, *cols: str) -> str:
+        path = derived_path(f"bkt_{name}", sf_dir, fixture_version(sf_dir, name))
+        table = os.path.basename(path).removeprefix("ospdms_")
         if spark.catalog.tableExists(table):
-            return
-        # the catalog is per-process (in-memory metastore) but the
-        # warehouse dir persists: drop a stale same-fingerprint
-        # location left by an earlier process before re-registering
-        loc = os.path.join(
-            spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"),
-            table,
-        )
-        shutil.rmtree(loc, ignore_errors=True)
-        write_bucketed(df, table, key, n_buckets=16)
+            return table
+        df = load_table(spark, sf_dir, name).select(*cols)
 
-    to = f"bkt_orders_{fingerprint('orders')}"
-    tc = f"bkt_customer_{fingerprint('customer')}"
-    ensure(
-        to,
-        load_table(spark, sf_dir, "orders").select(
-            "o_custkey", "o_orderkey", "o_totalprice"
-        ),
-        "o_custkey",
-    )
-    ensure(
-        tc,
-        load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
-        "c_custkey",
-    )
+        def write(tmp: str) -> None:
+            try:
+                write_bucketed(df, table, key, n_buckets=16, path=tmp)
+            finally:
+                # external table: dropping it keeps the files at tmp
+                spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+        write_once(path, write)
+        spark.sql(
+            f"CREATE TABLE {table} ({df.schema.toDDL()}) USING parquet "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO 16 BUCKETS "
+            f"LOCATION '{path}'"
+        )
+        return table
+
+    to = ensure("orders", "o_custkey", "o_custkey", "o_orderkey", "o_totalprice")
+    tc = ensure("customer", "c_custkey", "c_custkey", "c_mktsegment")
     o, c = spark.table(to), spark.table(tc)
     return (
         o.join(c, o["o_custkey"] == c["c_custkey"])

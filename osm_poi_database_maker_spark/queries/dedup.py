@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import fixture_version, load_table, session_memo
+from ..ops.recursion import fixpoint
 
 
 def q_doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1167,7 +1168,7 @@ def q_doc_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup neighborhood better than min-id when clusters are star-shaped
     (the hub that everything resembles scores highest).
 
-    The distributed-iterative shape beside dedup_clusters' converge-loop:
+    The fixed-count shape beside the ops.recursion.fixpoint loops:
     each iteration is ONE edges⨝ranks equi-join shuffled on the source
     id + one groupBy(dst) — per-iteration cost is |E| shuffle rows, and
     the iteration count is FIXED, so the whole thing is one static
@@ -1428,35 +1429,27 @@ def q_doc_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the "worth a human look" neighborhood list a curation review queue
     wants.
 
-    Distributed peel: each round recomputes degrees over the surviving
-    vertex set (one groupBy) and keeps vertices with deg ≥ k (the edge
-    list is re-filtered by an inner join against the survivor set on
-    BOTH endpoints). The round count is BOUNDED at 8 — the oracle
-    mirrors the peel with 8 unrolled CTE layers, and since rounds past
-    the fixed point are identities, the engine may stop as soon as the
-    survivor count repeats (r15) and still land byte-for-byte on the
-    oracle's layer-8 set — and each round localCheckpoints the (tiny)
-    survivor vector to keep lineage flat, the pagerank/dedup_clusters
-    scale discipline. On dup-cluster graphs (near-cliques) the cascade
-    settles in 1-2 rounds; a worst-case path graph would need
-    O(diameter) — production swaps the fixed bound for the
-    delta-doubling loop of ops/recursion.py, same per-round plan.
+    Distributed peel on ``ops.recursion.fixpoint``: the state is the
+    ``(v, core_deg)`` survivor frame; each round re-filters the edge
+    list by an inner join against the survivors on BOTH endpoints,
+    recomputes degrees (one groupBy) and keeps vertices with deg ≥ k.
+    The round count is BOUNDED at 8 — the oracle mirrors the peel with
+    8 unrolled CTE layers, and since rounds past the fixed point are
+    identities, the engine stops as soon as the survivor count repeats
+    and still lands byte-for-byte on the oracle's layer-8 set. At that
+    point the survivors' degrees were counted over the same survivor
+    set, so the state is the answer: each core member with its
+    within-core degree. On dup-cluster graphs (near-cliques) the
+    cascade settles in 1-2 rounds; a path graph needs O(diameter).
 
-    Truncation guard (r8): because the oracle unrolls the SAME fixed
-    layer count, a cascade needing more rounds would make both engines
-    agree on a non-2-core — undetectable by the gate. The peel
-    therefore tracks the (monotone-decreasing) survivor count per round
-    and RAISES if the last two rounds still differ: the survivor set is
-    a subset of the previous round's, so equal counts ⇒ identical sets
-    ⇒ fixed point. The counts ride the already-materialized eager
-    checkpoints, so the audit costs 8 count() actions on tiny vectors.
-    Emits each core member with its within-core degree."""
+    Truncation guard: because the oracle unrolls the SAME fixed layer
+    count, a cascade needing more rounds would make both engines agree
+    on a non-2-core — undetectable by the gate. The survivor set is a
+    subset of the previous round's, so equal counts ⇒ identical sets ⇒
+    fixed point; each round observes its survivor count in the job
+    that materialises it, and a peel that has not repeated a count
+    after 8 rounds raises "did not converge"."""
     pairs = _ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    # EAGER checkpoints: alive_r is referenced on BOTH join sides of
-    # round r+1, so a lazy checkpoint would double the logical plan per
-    # round (2^8 copies of the shingle pipeline — measured as minutes of
-    # pure Catalyst analysis). Materializing the tiny survivor vector
-    # each round keeps every round's plan two joins deep.
     edges = (
         pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
         .unionByName(
@@ -1464,41 +1457,31 @@ def q_doc_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    alive = edges.select(F.col("s").alias("v")).distinct()
-    deg = None
+
+    def step(alive: DataFrame) -> DataFrame:
+        return (
+            edges.join(alive.select(F.col("v").alias("s")), "s")
+            .join(alive.select(F.col("v").alias("t")), "t")
+            .groupBy(F.col("s").alias("v"))
+            .agg(F.count("*").alias("core_deg"))
+            .filter(F.col("core_deg") >= _KCORE_K)
+        )
+
     counts: list[int] = []
-    for _ in range(_KCORE_ROUNDS):
-        live_edges = (
-            edges.join(alive.withColumnRenamed("v", "s"), "s")
-            .join(alive.withColumnRenamed("v", "t"), "t")
-        )
-        deg = live_edges.groupBy(F.col("s").alias("v")).agg(
-            F.count("*").alias("core_deg")
-        )
-        alive = (
-            deg.filter(F.col("core_deg") >= _KCORE_K)
-            .select("v")
-            .localCheckpoint(eager=True)
-        )
-        counts.append(alive.count())
-        # early exit at the fixed point (r15): survivor sets are
-        # monotone-decreasing subsets, so equal consecutive counts ⇒
-        # identical sets ⇒ every remaining round is an identity — the
-        # unrolled-8-layer oracle lands on the same converged set.
-        # The counts already ride the eager checkpoints; on dup-cluster
-        # graphs this cuts the peel from 8 rounds to 2-3.
-        if len(counts) >= 2 and counts[-1] == counts[-2]:
-            break
-    if len(counts) >= 2 and counts[-1] != counts[-2]:
-        raise RuntimeError(
-            f"k-core peel not converged after {_KCORE_ROUNDS} rounds "
-            f"(survivor counts {counts}); raise _KCORE_ROUNDS (and the "
-            "oracle's unrolled layers) or switch to the delta-doubling loop"
-        )
-    return (
-        deg.join(alive, "v")
-        .select(F.col("v").alias("doc_id"), "core_deg")
+
+    def done(m: dict) -> bool:
+        counts.append(m["n"])
+        return len(counts) >= 2 and counts[-1] == counts[-2]
+
+    core = fixpoint(
+        edges.select(F.col("s").alias("v")).distinct(),
+        step,
+        [F.count("*").alias("n")],
+        done,
+        _KCORE_ROUNDS,
+        "doc_graph_kcore peel",
     )
+    return core.select(F.col("v").alias("doc_id"), "core_deg")
 
 
 def _kcore_oracle_sql() -> str:

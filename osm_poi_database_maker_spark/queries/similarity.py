@@ -730,7 +730,7 @@ def q_emb_kmeans_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     flip it); the update re-aggregates member vectors per (cid, pos) and
     pins the new |K|·dim table with a lazy checkpoint. The iteration
     count is FIXED so both engines run the identical unrolled dataflow
-    (the convergence-loop pattern lives in dedup_clusters).
+    (converge-or-raise loops run on ops.recursion.fixpoint).
     """
     final = _kmeans_final_assignment(spark, sf_dir)
     return final.groupBy(F.col("cid").alias("cluster_id")).agg(

@@ -8,10 +8,10 @@ equivalents:
 * :func:`render_copy_rows` — the COPY text protocol line as a column
   expression (tab-separated, COPY-escaped, ``\\N`` for NULL) so the
   serialization is distributed and codegen'd;
-* :func:`write_copy_postgres` — ``foreachPartition`` + psycopg2
-  ``copy_expert``: each of the N partitions streams its rows over its own
-  connection (N parallel COPYs ≙ the reference's single-threaded batched
-  COPY, scaled out). Import-gated: psycopg2 is optional;
+* :func:`write_copy_postgres_cli` — ``foreachPartition`` + ``psql``:
+  each of the N partitions pipes its rows into its own ``COPY FROM
+  STDIN`` (N parallel COPYs ≙ the reference's single-threaded batched
+  COPY, scaled out);
 * :func:`write_jdbc` — plain-column path via Spark's JDBC writer with
   ``batchsize`` ≙ WRITE_AFTER;
 * :func:`write_dead_letter` — parquet quarantine, replacing the CSV dump;
@@ -42,7 +42,7 @@ def copy_statement(
     geom_column: str = "geom",
 ) -> str:
     """The exact ``COPY`` SQL the bulk loader issues — factored out of
-    :func:`write_copy_postgres` so the per-table geometry column switch
+    :func:`write_copy_postgres_cli` so the per-table geometry column switch
     (``geom`` for nodes, ``linestring`` for ways — reference
     filter.py:43) is golden-testable without a live server."""
     target_cols = [geom_column if c == "geom" else c for c in columns]
@@ -90,46 +90,6 @@ def render_copy_rows(df: DataFrame, columns: Sequence[str] = NODE_COPY_COLUMNS) 
     return df.select(copy_line(columns).alias("line"))
 
 
-def write_copy_postgres(
-    df: DataFrame,
-    dsn: str,
-    table: str,
-    columns: Sequence[str] = NODE_COPY_COLUMNS,
-    geom_column: str = "geom",
-) -> None:
-    """Bulk-load via one COPY stream per partition (psycopg2 required).
-
-    Scale: each executor partition opens its own connection and streams
-    its rows — aggregate throughput scales with partitions until Postgres
-    is the bottleneck; `df.repartition(n)` controls the fan-in.
-    """
-    stmt = copy_statement(table, columns, geom_column)
-    lines = render_copy_rows(df, columns)
-
-    def _write_partition(rows: Iterator) -> None:
-        import io
-
-        import psycopg2  # optional dep; raises cleanly if absent
-
-        buf = io.StringIO()
-        n = 0
-        conn = psycopg2.connect(dsn)
-        try:
-            cur = conn.cursor()
-            for row in rows:
-                buf.write(row.line)
-                buf.write("\n")
-                n += 1
-            if n:
-                buf.seek(0)
-                cur.copy_expert(stmt, buf)
-            conn.commit()
-        finally:
-            conn.close()
-
-    lines.foreachPartition(_write_partition)
-
-
 def write_copy_postgres_cli(
     df: DataFrame,
     socket_dir: str,
@@ -139,14 +99,14 @@ def write_copy_postgres_cli(
     columns: Sequence[str] = NODE_COPY_COLUMNS,
     geom_column: str = "geom",
 ) -> None:
-    """Bulk-load via one ``psql``-driven COPY stream per partition —
-    the psycopg2-free twin of :func:`write_copy_postgres` (same COPY
-    statement, same rendered lines): each executor partition pipes its
-    text lines into ``psql -c "COPY ... FROM STDIN"`` over a unix
-    socket. Pure stdlib (subprocess), so the live-PG round-trip is
-    testable wherever the server binaries exist even without a driver
-    library; at scale the fan-in knob is identical (one connection per
-    partition, ``df.repartition(n)`` controls it)."""
+    """Bulk-load via one ``psql``-driven COPY stream per partition: each
+    executor partition pipes its rendered text lines
+    (:func:`render_copy_rows`) into ``psql -c "COPY ... FROM STDIN"``
+    over a unix socket. Pure stdlib (subprocess), so the live-PG
+    round-trip is testable wherever the server binaries exist, without
+    a driver library. Scale: one connection per partition; throughput
+    scales with partitions until Postgres is the bottleneck, and
+    ``df.repartition(n)`` controls the fan-in."""
     import subprocess
 
     stmt = copy_statement(table, columns, geom_column)

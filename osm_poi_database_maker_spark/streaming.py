@@ -1038,8 +1038,8 @@ def stream_stream_attribution(
 
 def foreach_batch_parquet_sink(stream: DataFrame, path: str, checkpoint: str):
     """micro-batch → bulk-append sink (the reference's WRITE_AFTER COPY
-    loop as foreachBatch; swap the body for write_copy_postgres to land
-    in PostGIS)."""
+    loop as foreachBatch; swap the body for write_copy_postgres_cli to
+    land in PostGIS)."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.withColumn("_batch_id", F.lit(batch_id)).write.mode("append").parquet(path)

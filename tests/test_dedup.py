@@ -447,6 +447,25 @@ def test_kcore_peels_tails_and_keeps_cliques(spark, monkeypatch):
     assert out == {1: 2, 2: 2, 3: 2}
 
 
+def test_kcore_raises_when_the_peel_outlasts_its_rounds(spark, monkeypatch):
+    """A 20-node path loses its two ends per round, so it needs 10 peel
+    rounds — more than the 8-round bound the oracle unrolls. Returning
+    the layer-8 survivors would agree with the oracle on a non-2-core,
+    so the peel must raise instead."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from osm_poi_database_maker_spark.queries import dedup as D
+
+    assert D._KCORE_ROUNDS == 8
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(19)], "doc_a long, doc_b long"
+    ).withColumn("jaccard", F.lit(1.0))
+    monkeypatch.setattr(D, "q_doc_ngram_jaccard_pairs", lambda s_, sf_: pairs)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        D.q_doc_graph_kcore(spark, "x")
+
+
 def test_novelty_attributes_first_owner_by_doc_id(spark, monkeypatch):
     """An exact dup of an earlier doc scores novelty 0; the earlier doc
     keeps 1.0; a half-overlapping later doc scores its unique fraction;

@@ -236,6 +236,47 @@ def test_orders_bucketed_join_plan_rides_buckets(spark):
     assert "Exchange" not in below, below[:2000]
 
 
+def test_orders_bucketed_join_writes_its_tables_once(spark):
+    """The bucketed tables are written once and only registered after
+    that: a session whose catalog has lost them (as every new process's
+    in-memory catalog has) re-registers the same files instead of
+    deleting and rewriting them under another process's live query."""
+    import os
+
+    from osm_poi_database_maker_spark.queries.core import q_orders_bucketed_join
+    from tests.conftest import SF_SMOKE
+
+    def locations():
+        out = {}
+        for t in spark.catalog.listTables():
+            if t.name.startswith(("bkt_orders_", "bkt_customer_")):
+                rows = spark.sql(f"DESCRIBE TABLE EXTENDED {t.name}").collect()
+                loc = next(r.data_type for r in rows if r.col_name == "Location")
+                out[t.name] = loc.removeprefix("file:")
+        return out
+
+    def files(locs):
+        snap = {}
+        for loc in locs.values():
+            for root, _, names in os.walk(loc):
+                for n in names:
+                    st = os.stat(os.path.join(root, n))
+                    snap[os.path.join(root, n)] = (st.st_ino, st.st_mtime_ns)
+        return snap
+
+    first = sorted(map(tuple, q_orders_bucketed_join(spark, SF_SMOKE).collect()))
+    locs = locations()
+    assert len(locs) == 2
+    before = files(locs)
+    assert any(p.endswith(".parquet") for p in before)
+    for name in locs:
+        spark.sql(f"DROP TABLE {name}")
+    again = sorted(map(tuple, q_orders_bucketed_join(spark, SF_SMOKE).collect()))
+    assert again == first
+    assert locations() == locs
+    assert files(locs) == before
+
+
 def test_salted_join_left_keeps_unmatched_rows_once(spark):
     """salted_join(how='left') must emit every unmatched skewed row
     EXACTLY once (the salt explode touches only the dim side) and

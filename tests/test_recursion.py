@@ -1,0 +1,83 @@
+"""``ops.recursion.fixpoint``: one job per round, flags read from that
+round's own job, and the round cap raising "did not converge"."""
+
+from __future__ import annotations
+
+import itertools
+
+from pyspark.sql import functions as F
+
+_GROUPS = itertools.count()
+
+
+def _run_in_group(spark, fn):
+    """Run ``fn()`` under a fresh job group; return (result or the
+    raised exception, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    gid = f"test-fixpoint-{next(_GROUPS)}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    except RuntimeError as e:
+        out = e
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _climb(spark, cap, max_rounds):
+    """Eight rows 0..7; each round adds 1 and clips at ``cap``, a step
+    with no shuffle. ``done`` records the metrics it is handed."""
+    from osm_poi_database_maker_spark.ops.recursion import fixpoint
+
+    seen: list[dict] = []
+
+    def done(m):
+        seen.append(m)
+        return m["lo"] == cap
+
+    def run():
+        return fixpoint(
+            spark.range(8).select(F.col("id").alias("x")),
+            lambda df: df.select(F.least(F.col("x") + 1, F.lit(cap)).alias("x")),
+            [F.min("x").alias("lo"), F.count("*").alias("n")],
+            done,
+            max_rounds,
+            "climb",
+        )
+
+    out, jobs = _run_in_group(spark, run)
+    return out, jobs, seen
+
+
+def test_fixpoint_runs_one_job_per_round_and_reads_its_flags(spark):
+    out, jobs, seen = _climb(spark, cap=5, max_rounds=10)
+    # round r has min(x) == r: done saw each round's own metrics, in order
+    assert seen == [{"lo": r, "n": 8} for r in range(1, 6)]
+    assert jobs == 5
+    assert sorted(r.x for r in out.collect()) == [5] * 8
+
+
+def test_fixpoint_raises_with_its_name_when_the_cap_is_exhausted(spark):
+    out, jobs, seen = _climb(spark, cap=5, max_rounds=3)
+    assert isinstance(out, RuntimeError)
+    assert "climb did not converge in 3 rounds" in str(out)
+    assert [m["lo"] for m in seen] == [1, 2, 3]
+    assert jobs == 3
+
+
+def test_fixpoint_observes_an_empty_round(spark):
+    """An empty round still reports its metrics: count 0, max None."""
+    from osm_poi_database_maker_spark.ops.recursion import fixpoint
+
+    seen = []
+    out = fixpoint(
+        spark.range(4),
+        lambda df: df.filter(F.col("id") < 0),
+        [F.count("*").alias("n"), F.max("id").alias("hi")],
+        lambda m: seen.append(m) or True,
+        5,
+        "empty",
+    )
+    assert seen == [{"n": 0, "hi": None}]
+    assert out.count() == 0
