@@ -1,22 +1,38 @@
-"""Recursive-query surface: one fixpoint loop, and the transitive
-closures of parent graphs built on it.
+"""Recursive-query surface: one fixpoint loop, one small-graph BFS
+kernel, and the transitive closures of parent graphs built on them.
 
 Spark has no ``WITH RECURSIVE``; this module provides the standard
-substitution. :func:`fixpoint` is the one converge-or-raise round loop
-of the package: each round is one lazily checkpointed frame,
-materialised by ONE job whose ``DataFrame.observe`` metrics answer
-"converged?" (and, for the functional closure, "cycle?"), under a round
-cap that raises "did not converge". The closures here, the dedup
-connected components (``dedup.dedup_clusters``) and the k-core peel
-(``queries/dedup.q_doc_graph_kcore``) all run on it.
+substitution. Each closure has two paths, chosen by the size of its
+input edge set against the session's own
+``spark.sql.autoBroadcastJoinThreshold``:
+
+- **Kernel** (the edges fit the threshold, at 16 bytes an edge). One
+  job collects the edges, numpy builds a CSR adjacency on the driver,
+  and a broadcast of it feeds ONE ``mapInArrow`` over
+  ``defaultParallelism`` node ranges. Each range runs a level-synchronous
+  multi-source BFS (:func:`_bfs`): BFS levels are exact minimum
+  distances, and the source is not marked visited, so a cycle of length
+  L yields its ``(n, n, L)`` self-row. A round loop here costs several
+  Spark jobs per round, and on graphs this size the job overhead, not
+  the data, is the whole cost.
+- **Loop** (more edges than that, or a threshold of -1):
+  :func:`fixpoint`, the one converge-or-raise round loop of the
+  package. Each round is one lazily checkpointed frame, materialised by
+  ONE job whose ``DataFrame.observe`` metrics answer "converged?" (and,
+  for the functional closure, "cycle?"), under a round cap that raises
+  "did not converge". The dedup connected components
+  (``dedup.dedup_clusters``) and the k-core peel
+  (``queries/dedup.q_doc_graph_kcore``) run on it too.
 
 Where a recursive CTE walks one edge per pass (O(depth) sequential
-joins — at 100 TB depth-30 chains mean 30 shuffles), both closures
+joins — at 100 TB depth-30 chains mean 30 shuffles), both loop closures
 double their reach every round, so a closure materializes in about
 log2(max_depth) joins. Two closures, one per graph shape:
 
 - :func:`ancestor_closure` — functional graphs (each node has at most
-  one parent: org charts, referral chains, category trees). Pointer
+  one parent: org charts, referral chains, category trees). The kernel
+  path checks cycles and depth on the driver by pointer jumping over
+  the parent-index array and stays lazy. The loop path is pointer
   jumping (Wyllie, 1979) over path arrays: the state is ONE row per
   node, ``(node, path, done)``, where ``path`` lists the node's first
   ancestors nearest first. A round joins every unfinished row to the
@@ -24,12 +40,17 @@ log2(max_depth) joins. Two closures, one per graph shape:
   path, so path length doubles while a round moves n rows, not the
   n·depth closure. One ``posexplode`` expands the result at the end.
 - :func:`min_dist_closure` — multi-parent DAGs (BOM graphs, category
-  DAGs), where a pair is reachable along many paths. Semi-naive min
-  doubling over ``(node, ancestor, dist)`` pairs: each round composes
-  only the DELTA (pairs new or improved last round) with the closure,
-  in both orders, and folds closure ∪ fwd ∪ bwd through one
-  (node, ancestor) min-aggregation carrying an ``old`` flag column, so
-  the next delta is a FILTER over the aggregated frame.
+  DAGs), where a pair is reachable along many paths. The kernel path
+  checkpoints the BFS output and reads its depth from the same job's
+  observed ``max(dist)``. The loop path is semi-naive min doubling over
+  ``(node, ancestor, dist)`` pairs: each round composes only the DELTA
+  (pairs new or improved last round) with the closure, in both orders,
+  and folds closure ∪ fwd ∪ bwd through one (node, ancestor)
+  min-aggregation carrying an ``old`` flag column, so the next delta is
+  a FILTER over the aggregated frame.
+
+Both paths keep ``max_rounds`` as the depth cap 2^max_rounds, and both
+raise at build time.
 
 Fixed-count loops (pagerank, BPE merges, k-means, farthest-point
 sampling) run a set number of rounds with no convergence flag, so they
@@ -38,10 +59,35 @@ unroll their own rounds instead of going through :func:`fixpoint`.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+_CLOSURE_DDL = "node long, ancestor long, dist long"
+_CYCLIC = (
+    "ancestor_closure did not converge: cyclic input "
+    "(a node is its own ancestor)"
+)
+
+
+def _not_converged(what: str, rounds: int) -> RuntimeError:
+    return RuntimeError(
+        f"{what} did not converge in {rounds} rounds: the input needs "
+        "more rounds than the cap, or has no fixed point"
+    )
+
+
+def _materialise(df: DataFrame, flags: Sequence[Column]) -> tuple[DataFrame, dict]:
+    """Checkpoint ``df`` lazily and compute it by one noop write that
+    carries ``flags`` (named aggregate columns over its rows) as
+    ``DataFrame.observe`` metrics; return the checkpointed frame, which
+    later reads take instead of re-running the lineage, and the
+    metrics."""
+    df = df.localCheckpoint(eager=False)
+    obs = Observation()
+    df.observe(obs, *flags).write.format("noop").mode("overwrite").save()
+    return df, obs.get
 
 
 def fixpoint(
@@ -55,25 +101,107 @@ def fixpoint(
     """Iterate ``state = step(state)`` until ``done`` holds; return the
     final state.
 
-    Each round's frame is checkpointed lazily and materialised by one
-    noop write that carries ``flags`` (named aggregate columns over the
-    round's rows) as ``DataFrame.observe`` metrics, so the job that
-    computes the round also computes its convergence flags, and the
-    next round reads the checkpoint instead of re-running the lineage.
+    Each round's frame is materialised by one job (:func:`_materialise`)
+    whose observed ``flags`` are that round's convergence flags.
     ``done`` gets that round's metrics as a dict (an aggregate over no
     rows gives its empty value, e.g. ``None`` for min/max) and may
     raise. Rounds past ``max_rounds`` would only hide a non-converging
     input, so exhausting the cap raises ``RuntimeError``."""
     for _ in range(max_rounds):
-        state = step(state).localCheckpoint(eager=False)
-        obs = Observation()
-        state.observe(obs, *flags).write.format("noop").mode("overwrite").save()
-        if done(obs.get):
+        state, metrics = _materialise(step(state), flags)
+        if done(metrics):
             return state
-    raise RuntimeError(
-        f"{what} did not converge in {max_rounds} rounds: the input needs "
-        "more rounds than the cap, or has no fixed point"
+    raise _not_converged(what, max_rounds)
+
+
+def _small_graph(edges: DataFrame):
+    """The ``(node, anc)`` edges as ``(ids, u, v)`` — the sorted distinct
+    node ids and each edge's endpoints as indices into them — when at
+    most ``autoBroadcastJoinThreshold // 16`` edges (two longs each)
+    exist and none has a null end; else ``None``, and the caller runs
+    its loop. One job: the ``limit`` keeps the collect bounded."""
+    import numpy as np
+
+    spark = edges.sparkSession
+    cap = spark._jconf.autoBroadcastJoinThreshold() // 16 + 1
+    if cap <= 0:
+        return None
+    t = (
+        edges.select(
+            F.col("node").cast("long").alias("node"),
+            F.col("anc").cast("long").alias("anc"),
+        )
+        .limit(cap)
+        .toArrow()
     )
+    if t.num_rows == cap or t.column(0).null_count or t.column(1).null_count:
+        return None
+    node = t.column(0).to_numpy().astype(np.int64, copy=False)
+    anc = t.column(1).to_numpy().astype(np.int64, copy=False)
+    ids = np.unique(np.concatenate((node, anc)))
+    return ids, np.searchsorted(ids, node), np.searchsorted(ids, anc)
+
+
+def _bfs(ids, off, adj, src, max_level: int) -> Iterator:
+    """Level-synchronous BFS from every node index in ``src`` at once
+    over the CSR adjacency ``(off, adj)``; yields one Arrow batch of
+    ``(node, ancestor, dist)`` ids per level. A frontier entry is a key
+    ``slot * n + node`` (slot = position of its source in ``src``);
+    ``seen`` holds every key emitted so far, sorted. Sources start
+    unseen, so a source reached again over a cycle is emitted at its
+    cycle length. Stops after level ``max_level``."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(ids)
+    slot, at = np.arange(len(src)), src
+    seen = np.full(1, -1)  # a sentinel below every key keeps take() in range
+    level = 0
+    while at.size and level < max_level:
+        level += 1
+        deg = off[at + 1] - off[at]
+        hop = adj[np.repeat(off[at] - np.cumsum(deg) + deg, deg) + np.arange(deg.sum())]
+        key = np.unique(np.repeat(slot, deg) * n + hop)
+        key = key[seen.take(np.searchsorted(seen, key), mode="clip") != key]
+        seen = np.sort(np.concatenate((seen, key)), kind="stable")  # merges two runs
+        slot, at = np.divmod(key, n)
+        if key.size:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids[src[slot]]),
+                    pa.array(ids[at]),
+                    pa.array(np.full(key.size, level, np.int64)),
+                ],
+                names=["node", "ancestor", "dist"],
+            )
+
+
+def _bfs_closure(spark, graph, max_rounds: int) -> DataFrame:
+    """Lazy ``(node, ancestor, dist)`` closure of ``graph`` (from
+    :func:`_small_graph`): the CSR adjacency (distinct edges sorted by
+    source, ``off`` its row offsets) is broadcast, and one
+    ``mapInArrow`` runs :func:`_bfs` over ``defaultParallelism`` ranges
+    of the nodes that have a parent. BFS stops at depth
+    2^max_rounds + 1, so an input too deep for the cap shows as a
+    ``dist`` above 2^max_rounds instead of running on."""
+    import numpy as np
+
+    ids, u, v = graph
+    u, v = np.divmod(np.unique(u * len(ids) + v), len(ids))
+    off = np.searchsorted(u, np.arange(len(ids) + 1))
+    src = np.unique(u)
+    sc = spark.sparkContext
+    bc = sc.broadcast((ids, off, v, src))
+    parts, max_level = sc.defaultParallelism, 2**max_rounds + 1
+
+    def run(batches):
+        ids, off, adj, src = bc.value
+        for b in batches:
+            for p in b.column(0).to_pylist():
+                part = src[p * len(src) // parts : (p + 1) * len(src) // parts]
+                yield from _bfs(ids, off, adj, part, max_level)
+
+    return spark.range(parts, numPartitions=parts).mapInArrow(run, _CLOSURE_DDL)
 
 
 def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
@@ -82,17 +210,41 @@ def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
     Input: ``(node, anc)`` — one parent edge per non-root node; the
     graph must be acyclic. Output: ``(node, ancestor, dist)`` — every
     ancestor of every node with its path length, exactly the rows a
-    linear recursive CTE produces.
+    linear recursive CTE produces. A cycle, or a node deeper than
+    2^max_rounds, raises "did not converge" at build time.
 
-    Invariant: at the start of round k every unfinished row holds its
-    first 2^(k-1) ancestors, and so does the ancestor it joins to
-    unless that one is done (its path is then complete). A row is done
-    when the joined ancestor is a root (it has no row) or is itself
+    Kernel path (the edges fit the broadcast threshold and no node has
+    two parent rows): pointer jumping over the parent-index array on
+    the driver finds every node's depth, or the nodes that never reach
+    a root (a cycle), in log2(n) numpy passes; the lazy BFS kernel then
+    gives the rows.
+
+    Loop path invariant: at the start of round k every unfinished row
+    holds its first 2^(k-1) ancestors, and so does the ancestor it joins
+    to unless that one is done (its path is then complete). A row is
+    done when the joined ancestor is a root (it has no row) or is itself
     done. A node at depth d ≤ 2^max_rounds is done within
     ``max_rounds + 1`` rounds. A cycle never reaches a root; once the
     paths are as long as the cycle some path holds its own node, which
     the round's ``any_self`` flag reports and the loop raises on.
     """
+    import numpy as np
+
+    graph = _small_graph(edges)
+    if graph is not None and len(np.unique(graph[1])) == len(graph[1]):
+        ids, u, v = graph
+        up = np.full(len(ids), -1)
+        up[u] = v
+        depth = (up >= 0).astype(np.int64)  # hops from a node to up[node]
+        for _ in range(len(ids).bit_length()):  # 2^rounds > n > any depth
+            live = np.flatnonzero(up >= 0)
+            depth[live] += depth[up[live]]
+            up[live] = up[up[live]]
+        if (up >= 0).any():
+            raise RuntimeError(_CYCLIC)
+        if depth.max(initial=0) > 2**max_rounds:
+            raise _not_converged("ancestor_closure", max_rounds + 1)
+        return _bfs_closure(edges.sparkSession, graph, max_rounds)
 
     def step(state: DataFrame) -> DataFrame:
         s, t = state.filter(~F.col("done")).alias("s"), state.alias("t")
@@ -110,10 +262,7 @@ def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
 
     def done(m: dict) -> bool:
         if m["any_self"]:
-            raise RuntimeError(
-                "ancestor_closure did not converge: cyclic input "
-                "(a node is its own ancestor)"
-            )
+            raise RuntimeError(_CYCLIC)
         return m["all_done"] is None or m["all_done"] == 1
 
     state = fixpoint(
@@ -156,20 +305,36 @@ def min_dist_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
     (shortest-WALK distances, finite for every reachable pair), so a
     cycle of length L simply yields ``(n, n, L)`` self-rows instead of
     diverging — a recursive CTE needs an explicit depth guard for the
-    same input.
+    same input. A shortest distance above 2^max_rounds raises "did not
+    converge" at build time.
 
-    Invariant: after round k every pair whose shortest distance is
-    ≤ 2^k carries that exact distance — split a shortest path at its
-    midpoint: both halves are shortest paths of length ≤ 2^(k-1), exact
-    by induction; the composition records their sum, and min() can keep
-    no overestimate because every recorded dist is a realizable path
-    length. Completeness of the delta composition: any shortest path of
-    length ≤ 2^(k+1) splits into two exact halves ≤ 2^k, and if both
-    halves were already exact a round earlier their composition was
-    produced then — so at least one half sits in the delta. Detecting
-    convergence costs one extra no-change round, so the loop runs
-    ``max_rounds + 1`` rounds.
+    Kernel path (the edges fit the broadcast threshold): the BFS kernel's
+    output is checkpointed by one job that also observes its
+    ``max(dist)``; BFS stops one level past the cap, so that maximum
+    exceeds 2^max_rounds exactly when the loop would run out of rounds.
+
+    Loop path invariant: after round k every pair whose shortest
+    distance is ≤ 2^k carries that exact distance — split a shortest
+    path at its midpoint: both halves are shortest paths of length
+    ≤ 2^(k-1), exact by induction; the composition records their sum,
+    and min() can keep no overestimate because every recorded dist is a
+    realizable path length. Completeness of the delta composition: any
+    shortest path of length ≤ 2^(k+1) splits into two exact halves
+    ≤ 2^k, and if both halves were already exact a round earlier their
+    composition was produced then — so at least one half sits in the
+    delta. Detecting convergence costs one extra no-change round, so the
+    loop runs ``max_rounds + 1`` rounds.
     """
+    graph = _small_graph(edges)
+    if graph is not None:
+        out, m = _materialise(
+            _bfs_closure(edges.sparkSession, graph, max_rounds),
+            [F.max("dist").alias("max_dist")],
+        )
+        if (m["max_dist"] or 0) > 2**max_rounds:
+            raise _not_converged("min_dist_closure", max_rounds + 1)
+        return out
+
     improved = F.col("old").isNull() | (F.col("dist") < F.col("old"))
 
     def step(state: DataFrame) -> DataFrame:

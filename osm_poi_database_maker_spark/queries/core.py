@@ -691,12 +691,16 @@ def q_customer_referral_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~ln(n) (max ~e·ln n), irregular per node — the closure genuinely
     traverses, it is not closed-form.
 
-    Spark side: ops.recursion.ancestor_closure pointer jumping — one
-    row per customer carrying its ancestor path, about log2(depth)
-    rounds, each one join of the unfinished rows to the n-row state,
-    then one posexplode into (node, ancestor, dist); vs the oracle's
-    O(depth) sequential recursive-CTE passes. At a 1e9-customer scale
-    that is ~5 n-row shuffles instead of ~30."""
+    Spark side: ops.recursion.ancestor_closure. While the edges fit the
+    session's broadcast threshold (16 bytes an edge) one job collects
+    them, the driver checks cycles and depth by pointer jumping, and one
+    lazy mapInArrow BFS kernel over a broadcast CSR adjacency emits
+    (node, ancestor, dist). Above that bound the round loop runs pointer
+    jumping: one row per customer carrying its ancestor path, about
+    log2(depth) rounds, each one join of the unfinished rows to the
+    n-row state, then one posexplode; vs the oracle's O(depth)
+    sequential recursive-CTE passes. At a 1e9-customer scale that is
+    ~5 n-row shuffles instead of ~30."""
     from ..ops.recursion import ancestor_closure
     from .curation import _lehmer_h
 
@@ -737,9 +741,13 @@ def q_customer_dag_min_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``WITH RECURSIVE … GROUP BY min(dist)`` shape of BOM explosions and
     category-DAG rollups.
 
-    Spark side: ops.recursion.min_dist_closure — pointer doubling with
-    a min() re-aggregation per round, ceil(log2(depth)) + 1 rounds
-    total vs the oracle CTE's O(depth) sequential passes. The gate
+    Spark side: ops.recursion.min_dist_closure. While the edges fit the
+    session's broadcast threshold, a BFS kernel over a broadcast CSR
+    adjacency gives the exact minimum distances in two jobs (the edge
+    collect, and one checkpoint that observes max(dist) for the round
+    cap). Above that bound the round loop runs pointer doubling with a
+    min() re-aggregation per round, ceil(log2(depth)) + 1 rounds total
+    vs the oracle CTE's O(depth) sequential passes. The gate
     output is the per-distance profile of the closure (pair count,
     distinct descendants, ancestor-key checksum) — any wrong or missing
     minimum distance shifts a row between dist groups and breaks the
@@ -800,7 +808,10 @@ def q_customer_referral_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure exists to answer: for every referrer, how many customers
     sit anywhere below them, how deep the subtree runs, and the total
     account balance it carries. Reuses ancestor_closure's output frame
-    (one extra shuffle: the group-by ancestor) plus a broadcast-scale
+    (the lazy BFS kernel while the edges fit the broadcast threshold,
+    else the pointer-jumping round loop — ~5 n-row shuffles instead of
+    ~30 at a 1e9-customer scale) plus one extra shuffle, the group-by
+    ancestor, and a broadcast-scale
     join of customer balances onto the closure's node side; at 100 TB
     the closure is the expensive artifact and this rollup is the cheap
     re-aggregation you run many times over it."""

@@ -84,3 +84,26 @@ def test_closures_match_oracle_under_layouts(spark, name, layout):
             spark.conf.set(k, v)
     con = duck(SF_SMOKE)
     assert compare(df.columns, rows, con.sql(entrymod.oracle_sql()[name])) == []
+
+
+@pytest.mark.parametrize("layout", ["aqe_off", "partitions_7"])
+@pytest.mark.parametrize("name", _CLOSURES)
+def test_closures_loop_path_match_oracle_under_layouts(spark, name, layout):
+    """The same gate on the round loop: with the broadcast threshold at
+    -1 the closures skip the BFS kernel, so the loop each one falls back
+    to above that bound stays value-gated."""
+    import __spark_entry__ as entrymod
+    from tools.check import compare, duck
+
+    conf = {**_LAYOUTS[layout], "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    had = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        df = entrymod.queries()[name](spark, SF_SMOKE)
+        rows = [tuple(r) for r in df.collect()]
+    finally:
+        for k, v in had.items():
+            spark.conf.set(k, v)
+    con = duck(SF_SMOKE)
+    assert compare(df.columns, rows, con.sql(entrymod.oracle_sql()[name])) == []

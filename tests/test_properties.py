@@ -7,7 +7,7 @@ import struct
 
 import pandas as pd
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
@@ -862,3 +862,142 @@ def test_ancestor_closure_raises_when_not_converging(spark, pairs, max_rounds):
 
     with pytest.raises(RuntimeError, match="did not converge"):
         ancestor_closure(_edges(spark, pairs), max_rounds=max_rounds).collect()
+
+
+# --- the two closure paths: BFS kernel and fixpoint loop vs brute force ----
+
+_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def _on_path(spark, path, fn):
+    """Run ``fn()`` on one closure path: ``kernel`` under the session's
+    broadcast threshold, ``loop`` with the threshold at -1."""
+    if path == "kernel":
+        return fn()
+    had = spark.conf.get(_THRESHOLD)
+    spark.conf.set(_THRESHOLD, "-1")
+    try:
+        return fn()
+    finally:
+        spark.conf.set(_THRESHOLD, had)
+
+
+def _bfs_rows(pairs) -> set[tuple[int, int, int]]:
+    """Brute force: a BFS from every node over its parent edges. The
+    source is not marked visited, so a cycle through it gives its
+    (n, n, cycle length) row."""
+    up: dict[int, set[int]] = {}
+    for node, anc in pairs:
+        up.setdefault(node, set()).add(anc)
+    out = set()
+    for src in up:
+        dist: dict[int, int] = {}
+        frontier, d = [src], 0
+        while frontier:
+            d += 1
+            nxt = [a for n in frontier for a in up.get(n, ()) if a not in dist]
+            for a in nxt:
+                dist.setdefault(a, d)
+            frontier = sorted(set(nxt))
+        out |= {(src, a, k) for a, k in dist.items()}
+    return out
+
+
+@st.composite
+def _digraphs(draw) -> list[tuple[int, int]]:
+    """Random multi-parent edge lists over a few ids: cycles, self-loops
+    and repeated edges all occur, and the list may be empty."""
+    ids = st.integers(0, draw(st.integers(1, 12)))
+    pairs = draw(st.lists(st.tuples(ids, ids), max_size=30))
+    return pairs + draw(st.lists(st.sampled_from(pairs), max_size=4)) if pairs else []
+
+
+@settings(max_examples=3, deadline=None)
+@given(_forests())
+@example({})
+def test_closure_paths_match_brute_force_on_forests(spark, parent):
+    """Both closures give the parent walk's rows on both paths."""
+    from osm_poi_database_maker_spark.ops.recursion import (
+        ancestor_closure,
+        min_dist_closure,
+    )
+
+    want = _walk_closure(parent)
+    assert want == _bfs_rows(parent.items())
+    for path in ("kernel", "loop"):
+        for closure in (ancestor_closure, min_dist_closure):
+            got = _on_path(
+                spark, path, lambda: _rows(closure(_edges(spark, parent.items())))
+            )
+            assert got == want, (path, closure.__name__)
+
+
+@settings(max_examples=4, deadline=None)
+@given(_digraphs())
+@example([])
+@example([(1, 2), (2, 3), (3, 1), (4, 4), (4, 1), (4, 1)])
+def test_min_dist_closure_paths_match_bfs(spark, pairs):
+    """On multi-parent graphs with cycles, self-loops and repeated edges
+    min_dist_closure gives the BFS distances, (n, n, L) self-rows
+    included, on both paths."""
+    from osm_poi_database_maker_spark.ops.recursion import min_dist_closure
+
+    want = _bfs_rows(pairs)
+    for path in ("kernel", "loop"):
+        got = _on_path(spark, path, lambda: _rows(min_dist_closure(_edges(spark, pairs))))
+        assert got == want, path
+
+
+@pytest.mark.parametrize("path", ["kernel", "loop"])
+@pytest.mark.parametrize("k", [1, 3])
+def test_min_dist_closure_round_cap(spark, k, path):
+    """With max_rounds=k a chain of depth 2^k converges and one of depth
+    2^k + 1 raises "did not converge", on both paths."""
+    from osm_poi_database_maker_spark.ops.recursion import min_dist_closure
+
+    def chain(depth):
+        return _edges(spark, [(i + 1, i) for i in range(depth)])
+
+    parent = {i + 1: i for i in range(2**k)}
+    got = _on_path(spark, path, lambda: _rows(min_dist_closure(chain(2**k), k)))
+    assert got == _walk_closure(parent)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _on_path(spark, path, lambda: min_dist_closure(chain(2**k + 1), k))
+
+
+@pytest.mark.parametrize("path", ["kernel", "loop"])
+@pytest.mark.parametrize(
+    "pairs, max_rounds",
+    [
+        ([(1, 1), (3, 2)], 12),
+        ([(1, 2), (2, 1)], 12),
+        ([(7, 6), (6, 5), (5, 1), (1, 2), (2, 3), (3, 1)], 12),
+        ([(i + 1, i) for i in range(8)], 1),
+    ],
+    ids=["self_loop", "two_cycle", "tail_into_cycle", "too_deep"],
+)
+def test_ancestor_closure_raises_at_build_time(spark, pairs, max_rounds, path):
+    """Each path raises "did not converge" while the closure is built:
+    no action is called on its result."""
+    from osm_poi_database_maker_spark.ops.recursion import ancestor_closure
+
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _on_path(
+            spark, path, lambda: ancestor_closure(_edges(spark, pairs), max_rounds)
+        )
+
+
+def test_ancestor_closure_multi_parent_input_keeps_the_loop_rows(spark):
+    """Input with a repeated parent row is outside the functional
+    contract; the default route runs the loop there, so both routes
+    give the same rows, repeats included."""
+    from osm_poi_database_maker_spark.ops.recursion import ancestor_closure
+
+    pairs = [(3, 2), (2, 1), (2, 1)]
+
+    def rows():
+        return sorted(tuple(r) for r in ancestor_closure(_edges(spark, pairs)).collect())
+
+    want = _on_path(spark, "loop", rows)
+    assert rows() == want
+    assert len(want) == 6 and len(set(want)) == 3

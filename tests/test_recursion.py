@@ -81,3 +81,30 @@ def test_fixpoint_observes_an_empty_round(spark):
     )
     assert seen == [{"n": 0, "hi": None}]
     assert out.count() == 0
+
+
+def test_closures_build_in_two_jobs_on_the_kernel_path(spark):
+    """Under the session's broadcast threshold each closure builds in at
+    most two jobs (the edge collect, and for min_dist_closure the
+    checkpoint that observes its depth); with the threshold at -1 the
+    same build runs the round loop."""
+    from osm_poi_database_maker_spark.ops.recursion import (
+        ancestor_closure,
+        min_dist_closure,
+    )
+
+    edges = spark.createDataFrame(
+        [(i + 1, i // 2) for i in range(16)], "node long, anc long"
+    )
+    for closure in (ancestor_closure, min_dist_closure):
+        out, jobs = _run_in_group(spark, lambda: closure(edges))
+        assert not isinstance(out, RuntimeError)
+        assert jobs <= 2, closure.__name__
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    had = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        _, jobs = _run_in_group(spark, lambda: min_dist_closure(edges))
+    finally:
+        spark.conf.set(key, had)
+    assert jobs > 2
