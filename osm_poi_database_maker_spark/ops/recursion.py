@@ -136,8 +136,7 @@ def _small_graph(edges: DataFrame):
     )
     if t.num_rows == cap or t.column(0).null_count or t.column(1).null_count:
         return None
-    node = t.column(0).to_numpy().astype(np.int64, copy=False)
-    anc = t.column(1).to_numpy().astype(np.int64, copy=False)
+    node, anc = t.column(0).to_numpy(), t.column(1).to_numpy()
     ids = np.unique(np.concatenate((node, anc)))
     return ids, np.searchsorted(ids, node), np.searchsorted(ids, anc)
 
