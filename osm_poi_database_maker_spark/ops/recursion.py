@@ -8,8 +8,8 @@ input edge set against the session's own
 
 - **Kernel** (the edges fit the threshold, at 16 bytes an edge). One
   job collects the edges, numpy builds a CSR adjacency on the driver,
-  and a broadcast of it feeds ONE ``mapInArrow`` over
-  ``defaultParallelism`` node ranges. Each range runs a level-synchronous
+  and ONE ``mapInArrow`` that carries it (broadcast above 1 MB) runs
+  over ``defaultParallelism`` node ranges. Each range runs a level-synchronous
   multi-source BFS (:func:`_bfs`): BFS levels are exact minimum
   distances, and the source is not marked visited, so a cycle of length
   L yields its ``(n, n, L)`` self-row. A round loop here costs several
@@ -64,7 +64,6 @@ from collections.abc import Callable, Iterator, Sequence
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-_CLOSURE_DDL = "node long, ancestor long, dist long"
 _CYCLIC = (
     "ancestor_closure did not converge: cyclic input "
     "(a node is its own ancestor)"
@@ -177,30 +176,33 @@ def _bfs(ids, off, adj, src, max_level: int) -> Iterator:
 
 def _bfs_closure(spark, graph, max_rounds: int) -> DataFrame:
     """Lazy ``(node, ancestor, dist)`` closure of ``graph`` (from
-    :func:`_small_graph`): the CSR adjacency (distinct edges sorted by
-    source, ``off`` its row offsets) is broadcast, and one
-    ``mapInArrow`` runs :func:`_bfs` over ``defaultParallelism`` ranges
-    of the nodes that have a parent. BFS stops at depth
-    2^max_rounds + 1, so an input too deep for the cap shows as a
-    ``dist`` above 2^max_rounds instead of running on."""
+    :func:`_small_graph`): one ``mapInArrow`` runs :func:`_bfs` over
+    ``defaultParallelism`` ranges of the nodes that have a parent. The
+    CSR adjacency (distinct edges sorted by source, ``off`` its row
+    offsets) ships inside the kernel's function, which Spark itself
+    broadcasts once it pickles to more than
+    ``spark.broadcast.UDFCompressionThreshold`` (1 MB); an explicit
+    ``sc.broadcast`` would leave one temp file per call until the
+    context stops. BFS stops at depth 2^max_rounds + 1, so an input too
+    deep for the cap shows as a ``dist`` above 2^max_rounds instead of
+    running on."""
     import numpy as np
 
     ids, u, v = graph
     u, v = np.divmod(np.unique(u * len(ids) + v), len(ids))
     off = np.searchsorted(u, np.arange(len(ids) + 1))
     src = np.unique(u)
-    sc = spark.sparkContext
-    bc = sc.broadcast((ids, off, v, src))
-    parts, max_level = sc.defaultParallelism, 2**max_rounds + 1
+    parts, max_level = spark.sparkContext.defaultParallelism, 2**max_rounds + 1
 
     def run(batches):
-        ids, off, adj, src = bc.value
         for b in batches:
             for p in b.column(0).to_pylist():
                 part = src[p * len(src) // parts : (p + 1) * len(src) // parts]
-                yield from _bfs(ids, off, adj, part, max_level)
+                yield from _bfs(ids, off, v, part, max_level)
 
-    return spark.range(parts, numPartitions=parts).mapInArrow(run, _CLOSURE_DDL)
+    return spark.range(parts, numPartitions=parts).mapInArrow(
+        run, "node long, ancestor long, dist long"
+    )
 
 
 def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:

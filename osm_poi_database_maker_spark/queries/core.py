@@ -694,7 +694,7 @@ def q_customer_referral_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark side: ops.recursion.ancestor_closure. While the edges fit the
     session's broadcast threshold (16 bytes an edge) one job collects
     them, the driver checks cycles and depth by pointer jumping, and one
-    lazy mapInArrow BFS kernel over a broadcast CSR adjacency emits
+    lazy mapInArrow BFS kernel over a CSR adjacency emits
     (node, ancestor, dist). Above that bound the round loop runs pointer
     jumping: one row per customer carrying its ancestor path, about
     log2(depth) rounds, each one join of the unfinished rows to the
@@ -742,7 +742,7 @@ def q_customer_dag_min_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     category-DAG rollups.
 
     Spark side: ops.recursion.min_dist_closure. While the edges fit the
-    session's broadcast threshold, a BFS kernel over a broadcast CSR
+    session's broadcast threshold, a BFS kernel over a CSR
     adjacency gives the exact minimum distances in two jobs (the edge
     collect, and one checkpoint that observes max(dist) for the round
     cap). Above that bound the round loop runs pointer doubling with a
