@@ -944,7 +944,9 @@ def test_min_dist_closure_paths_match_bfs(spark, pairs):
 
     want = _bfs_rows(pairs)
     for path in ("kernel", "loop"):
-        got = _on_path(spark, path, lambda: _rows(min_dist_closure(_edges(spark, pairs))))
+        got = _on_path(
+            spark, path, lambda: _rows(min_dist_closure(_edges(spark, pairs)))
+        )
         assert got == want, path
 
 
@@ -996,7 +998,8 @@ def test_ancestor_closure_multi_parent_input_keeps_the_loop_rows(spark):
     pairs = [(3, 2), (2, 1), (2, 1)]
 
     def rows():
-        return sorted(tuple(r) for r in ancestor_closure(_edges(spark, pairs)).collect())
+        clo = ancestor_closure(_edges(spark, pairs))
+        return sorted(tuple(r) for r in clo.collect())
 
     want = _on_path(spark, "loop", rows)
     assert rows() == want
