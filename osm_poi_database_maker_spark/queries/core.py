@@ -693,9 +693,9 @@ def q_customer_referral_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark side: ops.recursion.ancestor_closure. While the edges fit the
     session's broadcast threshold (16 bytes an edge) one job collects
-    them, the driver checks cycles and depth by pointer jumping, and one
-    lazy mapInArrow BFS kernel over a CSR adjacency emits
-    (node, ancestor, dist). Above that bound the round loop runs pointer
+    them and one more runs a mapInArrow BFS kernel over a CSR adjacency
+    that emits (node, ancestor, dist), checkpoints it and observes the
+    cycle and depth checks. Above that bound the round loop runs pointer
     jumping: one row per customer carrying its ancestor path, about
     log2(depth) rounds, each one join of the unfinished rows to the
     n-row state, then one posexplode; vs the oracle's O(depth)
@@ -808,11 +808,11 @@ def q_customer_referral_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure exists to answer: for every referrer, how many customers
     sit anywhere below them, how deep the subtree runs, and the total
     account balance it carries. Reuses ancestor_closure's output frame
-    (the lazy BFS kernel while the edges fit the broadcast threshold,
-    else the pointer-jumping round loop — ~5 n-row shuffles instead of
-    ~30 at a 1e9-customer scale) plus one extra shuffle, the group-by
-    ancestor, and a broadcast-scale
-    join of customer balances onto the closure's node side; at 100 TB
+    (the BFS kernel's checkpoint while the edges fit the broadcast
+    threshold, else the pointer-jumping round loop — ~5 n-row shuffles
+    instead of ~30 at a 1e9-customer scale) plus one extra shuffle, the
+    group-by ancestor, and a broadcast join of customer balances onto
+    the closure's node side; at 100 TB
     the closure is the expensive artifact and this rollup is the cheap
     re-aggregation you run many times over it."""
     from ..ops.recursion import ancestor_closure
@@ -826,8 +826,11 @@ def q_customer_referral_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node", (_lehmer_h(F.col("node")) % F.col("node")).alias("anc")
     )
     clo = ancestor_closure(edges)
+    # the hint keeps the customers the build side: the kernel path's
+    # closure is a checkpoint of a mapInArrow over a parts-row range,
+    # whose size estimate would otherwise make it the broadcast side
     return (
-        clo.join(cust, "node")
+        clo.join(F.broadcast(cust), "node")
         .groupBy(F.col("ancestor").alias("referrer"))
         .agg(
             F.count("*").alias("n_downstream"),

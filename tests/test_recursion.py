@@ -85,9 +85,9 @@ def test_fixpoint_observes_an_empty_round(spark):
 
 def test_closures_build_in_two_jobs_on_the_kernel_path(spark):
     """Under the session's broadcast threshold each closure builds in at
-    most two jobs (the edge collect, and for min_dist_closure the
-    checkpoint that observes its depth); with the threshold at -1 the
-    same build runs the round loop."""
+    most two jobs (the edge collect, and the checkpoint that observes
+    its depth and cycle flags); with the threshold at -1 the same build
+    runs the round loop."""
     from osm_poi_database_maker_spark.ops.recursion import (
         ancestor_closure,
         min_dist_closure,
