@@ -42,12 +42,13 @@ log2(max_depth) joins. Two closures, one per graph shape:
 
 - :func:`ancestor_closure` — functional graphs (each node has at most
   one parent: org charts, referral chains, category trees). The loop
-  path is pointer jumping (Wyllie, 1979) over path arrays: the state is ONE row per
-  node, ``(node, path, done)``, where ``path`` lists the node's first
-  ancestors nearest first. A round joins every unfinished row to the
-  state of the last ancestor on its path and appends that ancestor's
-  path, so path length doubles while a round moves n rows, not the
-  n·depth closure. One ``posexplode`` expands the result at the end.
+  path is pointer jumping (Wyllie, 1979) over path arrays: the state is
+  ONE row per node, ``(node, path, done)``, where ``path`` lists the
+  node's first ancestors nearest first. A round joins every unfinished
+  row to the state of the last ancestor on its path and appends that
+  ancestor's path, so path length doubles while a round moves n rows,
+  not the n·depth closure. One ``posexplode`` expands the result at
+  the end.
 - :func:`min_dist_closure` — multi-parent DAGs (BOM graphs, category
   DAGs), where a pair is reachable along many paths. The loop path is
   semi-naive min doubling over
@@ -159,16 +160,16 @@ def _bfs(ids, off, adj, src, max_level: int) -> Iterator:
     """Level-synchronous BFS from every node index in ``src`` at once
     over the CSR adjacency ``(off, adj)``; yields one Arrow batch of
     ``(node, ancestor, dist)`` ids per level. A frontier entry is a key
-    ``slot * n + node`` (slot = position of its source in ``src``).
-    The keys emitted so far are kept as sorted runs, each more than
-    twice the size of the next: a level's keys become a new run and
-    merge into the last run while that one is at most twice as large,
-    so there are O(log closure) runs and each key is merged O(log
-    closure) times. Re-sorting one run of every key each level costs
-    O(depth × closure) instead: 71 s against 3 s for the 1024 deepest
-    sources of a 4096-node chain, on one core. Sources start unseen, so a source reached again
-    over a cycle is emitted at its cycle length. Stops after level
-    ``max_level``."""
+    ``slot * n + node`` (slot = position of its source in ``src``). The
+    keys emitted so far are kept as sorted runs, each more than twice
+    the size of the next: a level's keys become a new run and merge into
+    the last run while that one is at most twice as large, so there are
+    O(log closure) runs and each key is merged O(log closure) times.
+    Re-sorting one run of every key each level costs O(depth × closure)
+    instead: 71 s against 3 s for the 1024 deepest sources of a
+    4096-node chain, on one core. Sources start unseen, so a source
+    reached again over a cycle is emitted at its cycle length. Stops
+    after level ``max_level``."""
     import numpy as np
     import pyarrow as pa
 
