@@ -240,7 +240,7 @@ def distinct_shingle_hash_array(toks: Column) -> Column:
     return F.transform(F.array_distinct(folded), lambda z: z["h"])
 
 
-def minhash_signature(shingles: Column, n_hashes: int = HASH_COUNT) -> Column:
+def minhash_signature(shingles: Column) -> Column:
     """64 independent minhashes in one pass: each shingle is char-hashed
     once (the portable polynomial family below), then hash_i =
     lehmer2(h0·64 + i) — cheap long arithmetic — and signature[i] = min
@@ -248,8 +248,8 @@ def minhash_signature(shingles: Column, n_hashes: int = HASH_COUNT) -> Column:
     array is traversed once. Portable: the DuckDB oracle recomputes the
     identical signatures, so MinHash output is hash-gated."""
     hashes = F.transform(shingles, portable_token_hash)
-    init = F.array_repeat(F.lit(_LONG_MAX).cast("long"), n_hashes)
-    idx = F.sequence(F.lit(0), F.lit(n_hashes - 1))
+    init = F.array_repeat(F.lit(_LONG_MAX).cast("long"), HASH_COUNT)
+    idx = F.sequence(F.lit(0), F.lit(HASH_COUNT - 1))
     return F.aggregate(
         hashes,
         init,
@@ -269,11 +269,11 @@ def estimated_jaccard(sig_a: Column, sig_b: Column) -> Column:
     return matches / F.size(sig_a)
 
 
-def lsh_bands(sig: Column, bands: int = DEFAULT_BANDS) -> Column:
+def lsh_bands(sig: Column) -> Column:
     """array<struct<band,bucket>>: bucket = hash of the band's slice."""
-    rows_per_band = HASH_COUNT // bands
+    rows_per_band = HASH_COUNT // DEFAULT_BANDS
     return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
+        F.sequence(F.lit(0), F.lit(DEFAULT_BANDS - 1)),
         lambda b: F.struct(
             b.alias("band"),
             F.xxhash64(
@@ -283,32 +283,14 @@ def lsh_bands(sig: Column, bands: int = DEFAULT_BANDS) -> Column:
     )
 
 
-def minhash_near_dups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.3,
-    bands: int = DEFAULT_BANDS,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """End-to-end MinHash-LSH near-dup pairs (doc_a < doc_b, est_jaccard).
-
-    HASH-GATED (round 5): signatures use the portable polynomial/Lehmer
-    family (``portable_token_hash`` + ``_port_mix``), so the DuckDB
-    oracle recomputes identical signatures, replays the same banding
-    (string-joined band slices — Spark's bucket is the xxhash64 of that
-    string, equality classes identical) and the same deterministic
-    ``max_bucket`` cap, and applies the same est_jaccard threshold.
-    Docs with fewer than 3 tokens are excluded (no full shingle — the
-    same guard as the n-gram Jaccard operator), which also keeps the
-    shingle construction exactly mirrorable in SQL.
-
-    ``max_bucket`` caps pathological buckets (e.g. near-empty docs all
-    hashing together) before the within-bucket self-join.
-    """
+def _minhash_signatures(df: DataFrame) -> DataFrame:
+    """(id, sig): the 64-minhash signature of every ``doc_id`` with at
+    least one full shingle of its ``text`` — the one signature pipeline
+    of :func:`minhash_near_dups` and :func:`minhash_cap_audit`, so both
+    see the same banding equality classes."""
     # spread rows before the shingle explode (a small parquet file scans
     # as one partition); at scale this is one linear pass
-    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")).repartition(df.sparkSession.sparkContext.defaultParallelism)
+    base = df.select(F.col("doc_id").alias("id"), F.col("text")).repartition(df.sparkSession.sparkContext.defaultParallelism)
     # signatures via explode + 64 plain min-aggregates: unlike a
     # transform/aggregate higher-order expression (interpreted, no
     # codegen), explode + groupBy stays inside whole-stage codegen and
@@ -330,18 +312,40 @@ def minhash_near_dups(
         F.min(_port_mix(F.col("h"), F.lit(i).cast("long"))).alias(f"m{i}")
         for i in range(HASH_COUNT)
     ]
-    # trailing repartition = the one exchange all four consumers (two
-    # band-join sides, two verify-side signature rejoins) read via
-    # ReuseExchange, so the signature aggregation runs exactly once
-    sigs = (
+    return (
         sh.groupBy("id")
         .agg(*mins)
         .select("id", F.array(*[F.col(f"m{i}") for i in range(HASH_COUNT)]).alias("sig"))
-        .repartition("id")
     )
 
+
+def minhash_near_dups(
+    df: DataFrame,
+    threshold: float = 0.3,
+    max_bucket: int = 200,
+) -> DataFrame:
+    """End-to-end MinHash-LSH near-dup pairs (doc_a < doc_b, est_jaccard).
+
+    HASH-GATED (round 5): signatures use the portable polynomial/Lehmer
+    family (``portable_token_hash`` + ``_port_mix``), so the DuckDB
+    oracle recomputes identical signatures, replays the same banding
+    (string-joined band slices — Spark's bucket is the xxhash64 of that
+    string, equality classes identical) and the same deterministic
+    ``max_bucket`` cap, and applies the same est_jaccard threshold.
+    Docs with fewer than 3 tokens are excluded (no full shingle — the
+    same guard as the n-gram Jaccard operator), which also keeps the
+    shingle construction exactly mirrorable in SQL.
+
+    ``max_bucket`` caps pathological buckets (e.g. near-empty docs all
+    hashing together) before the within-bucket self-join.
+    """
+    # trailing repartition = the one exchange all four consumers (two
+    # band-join sides, two verify-side signature rejoins) read via
+    # ReuseExchange, so the signature aggregation runs exactly once
+    sigs = _minhash_signatures(df).repartition("id")
+
     buckets = sigs.select(
-        "id", F.explode(lsh_bands(F.col("sig"), bands)).alias("bb")
+        "id", F.explode(lsh_bands(F.col("sig"))).alias("bb")
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     # cap hot buckets: deterministic keep-lowest-ids
     w_rank = F.row_number().over(Window.partitionBy("band", "bucket").orderBy("id"))
@@ -369,13 +373,7 @@ def minhash_near_dups(
     )
 
 
-def minhash_cap_audit(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bands: int = DEFAULT_BANDS,
-    max_bucket: int = 200,
-) -> DataFrame:
+def minhash_cap_audit(df: DataFrame, max_bucket: int = 200) -> DataFrame:
     """Cap-health summary for the MinHash-LSH bucket cap (r13 verdict
     #3): one row —
 
@@ -400,28 +398,9 @@ def minhash_cap_audit(
     work: shingle explode → 64-min aggregate → band explode → two
     aggregations.
     """
-    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    # same composed shingle-hash fold as minhash_near_dups (r14) — the
-    # audit must share the exact signature/banding equality classes
-    sh = base.select(
-        "id",
-        F.explode(
-            F.array_distinct(shingle_hash_array(F.split(F.col("text"), " +")))
-        ).alias("h"),
-    )
-    mins = [
-        F.min(_port_mix(F.col("h"), F.lit(i).cast("long"))).alias(f"m{i}")
-        for i in range(HASH_COUNT)
-    ]
-    sigs = (
-        sh.groupBy("id")
-        .agg(*mins)
-        .select("id", F.array(*[F.col(f"m{i}") for i in range(HASH_COUNT)]).alias("sig"))
-    )
     sizes = (
-        sigs.select("id", F.explode(lsh_bands(F.col("sig"), bands)).alias("bb"))
+        _minhash_signatures(df)
+        .select("id", F.explode(lsh_bands(F.col("sig"))).alias("bb"))
         .groupBy(F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
         .agg(F.count("*").alias("n"))
     )
@@ -529,16 +508,14 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_fingerprints(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, sh): the 64-bit SimHash fingerprint of every document —
-    value-identical to ``simhash64(text)`` per row (pytest-pinned), but
-    computed as a distributed aggregate pipeline instead of a per-row
-    higher-order fold, so each token is char-hashed once per DISTINCT
-    (doc, token) and the whole path stays inside whole-stage codegen
-    with map-side partial aggregation."""
-    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")).repartition(df.sparkSession.sparkContext.defaultParallelism)
+def simhash_fingerprints(df: DataFrame) -> DataFrame:
+    """(id, sh): the 64-bit SimHash fingerprint of each ``doc_id``'s
+    ``text`` — value-identical to ``simhash64(text)`` per row
+    (pytest-pinned), but computed as a distributed aggregate pipeline
+    instead of a per-row higher-order fold, so each token is char-hashed
+    once per DISTINCT (doc, token) and the whole path stays inside
+    whole-stage codegen with map-side partial aggregation."""
+    base = df.select(F.col("doc_id").alias("id"), F.col("text")).repartition(df.sparkSession.sparkContext.defaultParallelism)
     # r14: fold each DISTINCT (id, token) once and weight by its count —
     # Σ_occurrences ±1 == Σ_distinct cnt·(±1) exactly, and the fixture-
     # typical ~2.3× token repetition means ~2.3× less interpreted char
@@ -587,13 +564,7 @@ def simhash_fingerprints(
     )
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    max_bucket: int = 200,
-) -> DataFrame:
+def simhash_near_dups(df: DataFrame, max_bucket: int = 200) -> DataFrame:
     """SimHash near-dup pairs via 4×16-bit band LSH + Hamming verify.
 
     Two 64-bit hashes within Hamming distance 3 must agree exactly on at
@@ -608,7 +579,7 @@ def simhash_near_dups(
     signature is cheap enough to carry through the band join (unlike
     the MinHash array), so no verify-side rejoin is needed.
     """
-    h = simhash_fingerprints(df, id_col, text_col)
+    h = simhash_fingerprints(df)
     bands = F.array(
         *[
             F.struct(
@@ -637,7 +608,7 @@ def simhash_near_dups(
             hamming64(F.col("a.sh"), F.col("b.sh")).alias("hamming"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
     )
 
 

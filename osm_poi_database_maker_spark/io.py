@@ -71,9 +71,18 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The fixture table ``name``. Parquet schema inference runs a Spark
+    job, so the inferred schema is memoised per :func:`fixture_version`
+    and later reads of the same files pass it explicitly (no job)."""
     # nanosAsLong keeps legacy TIMESTAMP(NANOS) fixtures readable at all
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = session_memo(
+        spark,
+        ("load_table.schema", path, fixture_version(sf_dir, name)),
+        lambda: spark.read.parquet(path).schema,
+    )
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     return df
@@ -266,7 +275,7 @@ def register_catalog_tables(
 
 
 def analyze_tables(
-    spark: SparkSession, names: tuple[str, ...], with_columns: bool = True
+    spark: SparkSession, names: tuple[str, ...]
 ) -> dict[str, dict[str, str]]:
     """O21 (reference hand-sets ``n_distinct`` planner hints,
     schema.sql:119-122, 175-177): compute real table + column statistics
@@ -276,8 +285,7 @@ def analyze_tables(
     stats per table for auditing."""
     out: dict[str, dict[str, str]] = {}
     for name in names:
-        suffix = " FOR ALL COLUMNS" if with_columns else ""
-        spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS{suffix}")
+        spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
         rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
         out[name] = {
             r.col_name: r.data_type for r in rows if r.col_name in ("Statistics",)

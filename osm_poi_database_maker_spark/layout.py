@@ -46,9 +46,7 @@ def read_events_day_range(
     return df.filter((F.col("event_date") >= start) & (F.col("event_date") <= end))
 
 
-def write_embeddings_by_cell(
-    embeddings: DataFrame, path: str, cells: "object", id_col: str = "vec_id"
-) -> None:
+def write_embeddings_by_cell(embeddings: DataFrame, path: str, cells: "object") -> None:
     """IVF inverted lists as partition directories: assign each vector to
     its nearest centroid cell (``similarity.train_ivf_centroids``) and
     partition by it — an ANN probe of n cells reads n directories."""

@@ -92,30 +92,20 @@ RESIZED_SCHEMA = "doc_id long, width int, height int, payload binary"
 
 
 def resize_images(
-    images: DataFrame,
-    target_w: int = 32,
-    target_h: int = 32,
-    channels: int = 3,
-    decode_stub: bool = True,
+    images: DataFrame, target_w: int = 32, target_h: int = 32
 ) -> DataFrame:
     """Resize via mapInPandas: emits a fixed-size payload per image —
     the normalization step before batching images into a training run.
 
-    Stub resize produces a deterministic ``target_w·target_h·channels``
-    payload by cyclically sampling the source bytes (decode-free but
-    shape-faithful); ``decode_stub=False`` marks where a real
-    interpolating resize plugs in. Output payload size is constant, so
-    downstream batch shapes (and Arrow batch memory) are exactly
+    Stub resize produces a deterministic ``target_w·target_h·3``-byte
+    (3 channels) payload by cyclically sampling the source bytes
+    (decode-free but shape-faithful). Output payload size is constant,
+    so downstream batch shapes (and Arrow batch memory) are exactly
     predictable — the property a real pipeline needs from this stage."""
-    out_len = target_w * target_h * channels
+    out_len = target_w * target_h * 3
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real image resize requires an image codec (PIL/opencv); "
-                    "not available in this environment"
-                )
 
             def stub_resize(b: bytes) -> bytes:
                 if not b:
@@ -208,7 +198,7 @@ AHASH_BANDS = 8  # 8 bands x 8 bits: pigeonhole-complete for hamming <= 7
 AHASH_MAX_HAMMING = 6
 
 
-def _ahash_int64_safe_bytes(n_cells: int = 64) -> int:
+def _ahash_int64_safe_bytes() -> int:
     """Largest payload length L for which BOTH sides of image_ahash's
     cross-multiplied threshold provably fit int64 at the all-0xFF worst
     case. numpy int64 multiplication WRAPS silently past this (the
@@ -216,6 +206,7 @@ def _ahash_int64_safe_bytes(n_cells: int = 64) -> int:
     Spark side must fail loudly too — computed exactly in Python
     bigints once at import, binary-searched rather than the ~5 MB
     closed-form approximation in the docstring."""
+    n_cells = AHASH_GRID * AHASH_GRID
 
     def worst(L: int) -> int:
         base, rem = divmod(L, n_cells)
@@ -333,21 +324,17 @@ def image_ahash(images: DataFrame, grid: int = AHASH_GRID) -> DataFrame:
     return images.select("doc_id", "payload").mapInPandas(batches, AHASH_SCHEMA)
 
 
-def ahash_near_dups(
-    images: DataFrame,
-    max_hamming: int = AHASH_MAX_HAMMING,
-    bands: int = AHASH_BANDS,
-    max_bucket: int = 200,
-) -> DataFrame:
+def ahash_near_dups(images: DataFrame, max_bucket: int = 200) -> DataFrame:
     """Perceptual near-duplicate image pairs: aHash signatures, banded
     LSH candidate generation, exact Hamming verify — image dedup for a
     multimodal training corpus (the visual twin of SimHash text dedup).
 
-    The 64-bit hash splits into ``bands`` equal bands; candidates must
-    agree on ≥1 band — pigeonhole-complete for hamming < bands, so
-    bands=8 guarantees recall at the ≤6 threshold. The band join is an
-    equi-join on (band_idx, band_value) — 8 rows of ~10 B per image,
-    never all-pairs — then `bit_count(xor)` verifies exactly and
+    The 64-bit hash splits into ``AHASH_BANDS`` = 8 equal bands;
+    candidates must agree on ≥1 band — pigeonhole-complete for hamming
+    < 8, so recall is guaranteed at the ≤``AHASH_MAX_HAMMING`` = 6
+    threshold. The band join is an equi-join on (band_idx, band_value)
+    — 8 rows of ~10 B per image, never all-pairs — then
+    `bit_count(xor)` verifies exactly and
     ``distinct`` collapses pairs that matched in several bands. At
     scale this is the SimHash plan: shuffle bounded by band-bucket
     occupancy, and hot buckets (e.g. monochrome images all hashing 0)
@@ -355,7 +342,7 @@ def ahash_near_dups(
     same guard the MinHash/SimHash operators use, bounding the worst
     bucket's contribution at max_bucket² candidate rows."""
     return _banded_hamming_pairs(
-        image_ahash(images), "ahash", bands, max_hamming, max_bucket
+        image_ahash(images), "ahash", AHASH_BANDS, AHASH_MAX_HAMMING, max_bucket
     )
 
 
@@ -623,21 +610,16 @@ def image_phash(images: DataFrame) -> DataFrame:
     )
 
 
-def phash_near_dups(
-    images: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    bands: int = PHASH_BANDS,
-    max_bucket: int = 200,
-) -> DataFrame:
+def phash_near_dups(images: DataFrame) -> DataFrame:
     """pHash near-duplicate pairs: banded LSH candidates (8 bands of 8
     bits over the 63-bit signature — pigeonhole-complete for hamming
     < 8, covering the ≤{PHASH_MAX_HAMMING} threshold), exact
-    bit_count(xor) verify, hot buckets capped at ``max_bucket`` like
+    bit_count(xor) verify, hot buckets capped at 200 members like
     every other banded dedup op. Shares _banded_hamming_pairs with
     ahash_near_dups — one plan shape, shuffle rides band-bucket
     occupancy, never all-pairs."""
     return _banded_hamming_pairs(
-        image_phash(images), "phash", bands, max_hamming, max_bucket
+        image_phash(images), "phash", PHASH_BANDS, PHASH_MAX_HAMMING, 200
     )
 
 

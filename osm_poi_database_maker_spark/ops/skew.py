@@ -59,7 +59,6 @@ def write_bucketed(
     table: str,
     key: str,
     n_buckets: int = 32,
-    sort: bool = True,
     path: str | None = None,
 ) -> None:
     """Write a table bucketed (and sorted) on the join key. Two tables
@@ -67,9 +66,7 @@ def write_bucketed(
     zero Exchange in the plan — the shuffle is paid once at write time,
     then amortized over every subsequent join. ``path`` makes the table
     external (data at ``path``, bucket metadata in the catalog)."""
-    writer = df.write.bucketBy(n_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
+    writer = df.write.bucketBy(n_buckets, key).sortBy(key)
     if path:
         writer = writer.option("path", path)
     writer.mode("overwrite").format("parquet").saveAsTable(table)

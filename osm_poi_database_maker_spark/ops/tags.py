@@ -70,7 +70,6 @@ def toi_semi_join(
     df: DataFrame,
     toi: DataFrame,
     min_occurrences: int,
-    tags_col: str = "tags",
 ) -> DataFrame:
     """Keep rows where some ``(key, value)`` tag pair appears in the TOI
     dimension with a global count above the threshold.
@@ -85,7 +84,7 @@ def toi_semi_join(
     """
     dim = toi.filter(F.col("count") > F.lit(min_occurrences)).select("key", "value")
     cond = F.exists(
-        F.map_entries(df[tags_col]),
+        F.map_entries(df["tags"]),
         lambda e: (e["key"] == dim["key"]) & (e["value"] == dim["value"]),
     )
     return df.join(F.broadcast(dim), cond, "left_semi")

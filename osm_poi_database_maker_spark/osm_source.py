@@ -70,8 +70,13 @@ def _rows_to_parquet(rows: list[dict[str, Any]], out_path: str, kind: str) -> No
     pq.write_table(table, out_path)
 
 
-def pbf_to_parquet(pbf_path: str, out_dir: str, batch_size: int = 500_000) -> dict[str, int]:
-    """Stream an OSM file once, spilling nodes/ways parquet batches.
+#: rows per spilled parquet file of :func:`pbf_to_parquet`
+_SPILL_ROWS = 500_000
+
+
+def pbf_to_parquet(pbf_path: str, out_dir: str) -> dict[str, int]:
+    """Stream an OSM file once, spilling nodes/ways parquet files of
+    ``_SPILL_ROWS`` rows.
 
     Returns counts {"nodes": n, "ways": m}. Requires pyosmium.
     """
@@ -112,7 +117,7 @@ def pbf_to_parquet(pbf_path: str, out_dir: str, batch_size: int = 500_000) -> di
                 }
             )
             counts["nodes"] += 1
-            if len(state["nodes"]) >= batch_size:
+            if len(state["nodes"]) >= _SPILL_ROWS:
                 flush("nodes")
 
         def area(self, a):
@@ -136,7 +141,7 @@ def pbf_to_parquet(pbf_path: str, out_dir: str, batch_size: int = 500_000) -> di
                 }
             )
             counts["ways"] += 1
-            if len(state["ways"]) >= batch_size:
+            if len(state["ways"]) >= _SPILL_ROWS:
                 flush("ways")
 
     Bridge().apply_file(pbf_path, locations=True)

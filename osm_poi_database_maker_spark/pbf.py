@@ -228,6 +228,11 @@ def decompress_blob(data) -> bytes:
 # ---------------------------------------------------------------------------
 
 MEMBER_TYPES = ("node", "way", "relation")
+#: the OSM PBF defaults for a block's coordinate unit (nanodegrees) and
+#: timestamp unit (ms): what :func:`encode_pbf` writes and what the
+#: decoder assumes when a block omits them
+GRANULARITY = 100
+DATE_GRANULARITY = 1000
 
 PBF_ENTITY_DDL = (
     "osm_type string, id long, version int, user_id int, tstamp timestamp, "
@@ -481,7 +486,7 @@ def decode_block(raw) -> list[pa.RecordBatch]:
     and relations. Malformed data raises ``ValueError``."""
     strings: list[bytes] = []
     groups = []
-    params = {17: 100, 18: 1000, 19: 0, 20: 0}
+    params = {17: GRANULARITY, 18: DATE_GRANULARITY, 19: 0, 20: 0}
     for fno, _wt, v in _iter_fields(memoryview(raw)):
         if fno == 1:
             strings = [bytes(s) for f2, _w, s in _iter_fields(v) if f2 == 1]
@@ -638,16 +643,14 @@ def _encode_block(
     nodes: list[dict[str, Any]],
     ways: list[dict[str, Any]],
     relations: list[dict[str, Any]],
-    granularity: int,
-    date_granularity: int,
 ) -> bytes:
     st = _StringTable()
     groups = []
 
     if nodes:
         ids = _delta_zigzag(n["id"] for n in nodes)
-        lats = _delta_zigzag(round(n["lat"] * 1e9) // granularity for n in nodes)
-        lons = _delta_zigzag(round(n["lon"] * 1e9) // granularity for n in nodes)
+        lats = _delta_zigzag(round(n["lat"] * 1e9) // GRANULARITY for n in nodes)
+        lons = _delta_zigzag(round(n["lon"] * 1e9) // GRANULARITY for n in nodes)
         kv: list[bytes] = []
         for n in nodes:
             for k, v in n.get("tags", {}).items():
@@ -660,7 +663,7 @@ def _encode_block(
             + _enc_packed(
                 2,
                 _delta_zigzag(
-                    (n.get("tstamp_ms") or 0) // date_granularity for n in nodes
+                    (n.get("tstamp_ms") or 0) // DATE_GRANULARITY for n in nodes
                 ),
             )
             + _enc_packed(3, _delta_zigzag(n.get("changeset_id") or 0 for n in nodes))
@@ -673,14 +676,14 @@ def _encode_block(
     for w in ways:
         body = _enc_field_varint(1, w["id"])
         body += _enc_kv(w.get("tags", {}), st)
-        body += _enc_field_bytes(4, _enc_info(w, date_granularity))
+        body += _enc_field_bytes(4, _enc_info(w, DATE_GRANULARITY))
         body += _enc_packed(8, _delta_zigzag(w.get("refs", [])))
         groups.append(_enc_field_bytes(3, body))
 
     for r in relations:
         body = _enc_field_varint(1, r["id"])
         body += _enc_kv(r.get("tags", {}), st)
-        body += _enc_field_bytes(4, _enc_info(r, date_granularity))
+        body += _enc_field_bytes(4, _enc_info(r, DATE_GRANULARITY))
         members = r.get("members", [])
         body += _enc_packed(8, (_enc_uvarint(st.add(role)) for _t, _i, role in members))
         body += _enc_packed(9, _delta_zigzag(i for _t, i, _r in members))
@@ -692,8 +695,8 @@ def _encode_block(
     block = _enc_field_bytes(1, st.encode())
     for g in groups:
         block += _enc_field_bytes(2, g)
-    block += _enc_field_varint(17, granularity)
-    block += _enc_field_varint(18, date_granularity)
+    block += _enc_field_varint(17, GRANULARITY)
+    block += _enc_field_varint(18, DATE_GRANULARITY)
     return block
 
 
@@ -715,8 +718,6 @@ def encode_pbf(
     nodes: Iterable[dict[str, Any]] = (),
     ways: Iterable[dict[str, Any]] = (),
     relations: Iterable[dict[str, Any]] = (),
-    granularity: int = 100,
-    date_granularity: int = 1000,
     compress: bool = True,
     block_size: int = 8000,
 ) -> int:
@@ -742,7 +743,7 @@ def encode_pbf(
         blobs.append(
             _enc_blob(
                 "OSMData",
-                _encode_block(chunk, [], [], granularity, date_granularity),
+                _encode_block(chunk, [], []),
                 compress,
             )
         )
@@ -750,7 +751,7 @@ def encode_pbf(
         blobs.append(
             _enc_blob(
                 "OSMData",
-                _encode_block([], chunk, [], granularity, date_granularity),
+                _encode_block([], chunk, []),
                 compress,
             )
         )
@@ -758,7 +759,7 @@ def encode_pbf(
         blobs.append(
             _enc_blob(
                 "OSMData",
-                _encode_block([], [], chunk, granularity, date_granularity),
+                _encode_block([], [], chunk),
                 compress,
             )
         )
@@ -794,7 +795,7 @@ def resolve_osm_paths(path, suffixes=(".pbf",)) -> list[str]:
     return [path]
 
 
-def read_pbf(spark, path, blobs_per_task: int | None = None):
+def read_pbf(spark, path):
     """Distributed PBF scan: blob index on the driver, blob decode on
     executors. Returns the unified entity DataFrame (PBF_ENTITY_DDL).
     ``path`` may be one file, a directory, a glob, or a list (extract
@@ -821,15 +822,7 @@ def read_pbf(spark, path, blobs_per_task: int | None = None):
         for (btype, off, size) in scan_blob_index(p)
         if btype == "OSMData"
     ]
-    n_tasks = max(
-        1,
-        min(
-            len(index),
-            spark.sparkContext.defaultParallelism
-            if blobs_per_task is None
-            else -(-len(index) // blobs_per_task),
-        ),
-    )
+    n_tasks = max(1, min(len(index), spark.sparkContext.defaultParallelism))
     idx = spark.createDataFrame(index, "path string, offset long, datasize long")
     idx = idx.repartition(n_tasks)
 

@@ -23,11 +23,14 @@ tests/test_pbf.py).
 Reference parity: the reference ingests PBF via osmium handlers
 (filter.py:260); here the same capability is a registered Spark source:
 ``spark.dataSource.register(OsmPbfDataSource)`` then
-``spark.read.format("osmpbf").load(path)``.
+``spark.read.format("osmpbf").load(path)``, where ``path`` is a file,
+directory or glob, or a list of them — the same specs :func:`read_pbf`
+takes, resolved by the same :func:`~.pbf.resolve_osm_paths`.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Iterator
 
 import pyarrow as pa
@@ -47,7 +50,9 @@ class OsmPbfInputPartition(InputPartition):
 
 class OsmPbfReader(DataSourceReader):
     def __init__(self, options: dict[str, str]):
-        path = options.get("path")
+        # .load(p) and .load([p]) pass the option "path"; .load([a, b])
+        # passes "paths", a JSON array
+        path = options.get("path") or json.loads(options.get("paths") or "[]")
         if not path:
             raise ValueError("osmpbf source requires a path: .load('<file|dir|glob>')")
         self._path = path
@@ -71,8 +76,9 @@ class OsmPbfReader(DataSourceReader):
 
 
 class OsmPbfDataSource(DataSource):
-    """``format("osmpbf")``: .load() accepts a file, directory, glob, or
-    comma-free path list handled by resolve_osm_paths."""
+    """``format("osmpbf")``: ``.load()`` accepts a file, directory or
+    glob, or a list of them; :func:`~.pbf.resolve_osm_paths` expands
+    either into the file list."""
 
     @classmethod
     def name(cls) -> str:

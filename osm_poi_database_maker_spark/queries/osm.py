@@ -75,14 +75,14 @@ def _cascade_where(json_col: str) -> str:
     """
 
 
-def _matched_sql(src: str, json_col: str = "tags_json", prefix: str = "") -> str:
+def _matched_sql(src: str, prefix: str = "") -> str:
     """O6: ids whose tag map hits the thresholded dimension. ``prefix``
     namespaces the CTEs so two cascades (e.g. ways + relations) can
     coexist in one WITH chain."""
     return f"""
   {prefix}kv AS (
-    SELECT id, k, json_extract_string({json_col}, '$."' || k || '"') AS v
-    FROM (SELECT id, {json_col}, unnest(json_keys({json_col})) AS k FROM {src})
+    SELECT id, k, json_extract_string(tags_json, '$."' || k || '"') AS v
+    FROM (SELECT id, tags_json, unnest(json_keys(tags_json)) AS k FROM {src})
   ),
   {prefix}matched AS (
     SELECT DISTINCT {prefix}kv.id FROM {prefix}kv

@@ -1896,9 +1896,9 @@ def _jl_weights() -> list[list[int]]:
     return w
 
 
-def jl_project(e: DataFrame, r: int = _JL_R) -> DataFrame:
+def jl_project(e: DataFrame) -> DataFrame:
     """(vec_id, proj array<long>) — fixed-point Johnson–Lindenstrauss
-    projection to r dims: vq = floor(v·10⁶) int64, proj_p = Σ_d w(p,d)·
+    projection to ``_JL_R`` dims: vq = floor(v·10⁶) int64, proj_p = Σ_d w(p,d)·
     vq_d, exact integer math end-to-end (|proj| ≤ 64·10⁶·10³ ≈ 6.4e10,
     int64-safe). One server-side-parsed expr (the SRP py4j lesson: a
     literal weight matrix built from F.lit columns costs seconds of
@@ -1908,7 +1908,7 @@ def jl_project(e: DataFrame, r: int = _JL_R) -> DataFrame:
     wmat_sql = (
         "array("
         + ",".join(
-            "array(" + ",".join(f"{x}L" for x in row) + ")" for row in _jl_weights()[:r]
+            "array(" + ",".join(f"{x}L" for x in row) + ")" for row in _jl_weights()
         )
         + ")"
     )
@@ -1918,7 +1918,7 @@ def jl_project(e: DataFrame, r: int = _JL_R) -> DataFrame:
     qdf = e.select("vec_id", vq.alias("vq")).repartition("vec_id")
     proj = F.expr(
         f"""
-        transform(sequence(0, {r - 1}), p ->
+        transform(sequence(0, {_JL_R - 1}), p ->
           aggregate(zip_with(vq, element_at({wmat_sql}, CAST(p + 1 AS INT)),
                              (a, w) -> a * w),
                     CAST(0 AS BIGINT), (s, v) -> s + v))

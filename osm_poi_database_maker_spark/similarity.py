@@ -24,6 +24,8 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 DIM = 64
+#: bits per LSH signature of :func:`ann_topk` (its docstring has the tradeoff)
+LSH_BITS = 4
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -59,16 +61,14 @@ def cosine_topk(
     collection: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors for each query vector (brute force,
     broadcast queries). Deterministic rank: rounded cosine desc, id asc."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).withColumn("q_norm", norm(F.col("q_vec")))
     c = collection.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     ).withColumn("c_norm", norm(F.col("c_vec")))
     scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).withColumn(
         "cosine", _cosine_prenorm()
@@ -81,39 +81,41 @@ def cosine_topk(
     )
 
 
-def train_ivf_centroids(
-    collection: DataFrame,
-    n_cells: int = 16,
-    sample_size: int = 2048,
-    n_iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> np.ndarray:
-    """Deterministic IVF coarse quantizer: spherical k-means (Lloyd on
-    L2-normalized vectors) over a bounded driver-side sample.
+#: size of the IVF/PQ/OPQ trainers' driver-side sample, and their Lloyd
+#: iteration count
+_TRAIN_SAMPLE = 2048
+_TRAIN_ITERS = 10
 
-    The sample is the ``sample_size`` vectors with the lowest
-    ``xxhash64(id, seed)`` — a TakeOrdered over a seeded hash of the id,
-    not a full sort — so training cost is constant w.r.t. collection
-    size AND the sample is unbiased even when ids correlate with
-    content (lowest-id sampling would train the quantizer on whatever
-    was ingested first). The expensive step (assigning every vector)
-    stays distributed in :func:`ivf_topk`. Fixed seed → identical
-    centroids every run."""
+
+def _training_sample(collection: DataFrame, seed: int) -> np.ndarray:
+    """The trainers' bounded driver-side sample as a float64 matrix (no
+    rows on an empty collection): the ``_TRAIN_SAMPLE`` vectors with the
+    lowest ``xxhash64(vec_id, seed)`` — a TakeOrdered over a seeded hash
+    of the id, not a full sort — so training cost is constant w.r.t.
+    collection size AND the sample is unbiased even when ids correlate
+    with content (lowest-id sampling would train on whatever was
+    ingested first)."""
     rows = (
-        collection.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        collection.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
         .orderBy(F.xxhash64(F.col("id"), F.lit(seed)), F.col("id"))
-        .limit(sample_size)
+        .limit(_TRAIN_SAMPLE)
         .collect()
     )
-    if not rows:  # empty collection → no cells (callers short-circuit)
+    return np.array([r.v for r in rows], dtype=np.float64)
+
+
+def train_ivf_centroids(collection: DataFrame, n_cells: int = 16) -> np.ndarray:
+    """Deterministic IVF coarse quantizer: spherical k-means (Lloyd on
+    L2-normalized vectors) over :func:`_training_sample`. The expensive
+    step (assigning every vector) stays distributed in :func:`ivf_topk`.
+    Fixed seed → identical centroids every run."""
+    m = _training_sample(collection, 42)
+    if not len(m):  # empty collection → no cells (callers short-circuit)
         return np.zeros((0, 0))
-    m = np.array([r.v for r in rows], dtype=np.float64)
     m /= np.linalg.norm(m, axis=1, keepdims=True)
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     cents = m[rng.choice(len(m), size=min(n_cells, len(m)), replace=False)]
-    for _ in range(n_iters):
+    for _ in range(_TRAIN_ITERS):
         assign = (m @ cents.T).argmax(axis=1)
         for c in range(len(cents)):
             members = m[assign == c]
@@ -155,13 +157,11 @@ def topcells_udf(cents: np.ndarray, n_top: int):
     return topcells
 
 
-def _empty_topk_result(
-    collection: DataFrame, queries: DataFrame, id_col: str
-) -> DataFrame:
+def _empty_topk_result(collection: DataFrame, queries: DataFrame) -> DataFrame:
     """Empty result with the SAME schema the non-empty top-k paths
-    produce (id columns inherit the caller's id_col type)."""
-    q0 = queries.select(F.col(id_col).alias("query_id")).limit(0)
-    c0 = collection.select(F.col(id_col).alias("neighbor_id")).limit(0)
+    produce (id columns inherit the ``vec_id`` type)."""
+    q0 = queries.select(F.col("vec_id").alias("query_id")).limit(0)
+    c0 = collection.select(F.col("vec_id").alias("neighbor_id")).limit(0)
     return (
         q0.crossJoin(c0)
         .withColumn("cosine", F.lit(None).cast("double"))
@@ -199,7 +199,7 @@ def _derived_n_blocks(
     return collection, max(1, -(-n // _BLOCK_TARGET_ROWS))
 
 
-def _blocked_sides(collection: DataFrame, n_blocks: int, id_col: str, vec_col: str):
+def _blocked_sides(collection: DataFrame, n_blocks: int):
     """Shared scaffolding of the exact blocked similarity operators
     (:func:`cosine_neardup_pairs`, :func:`knn_graph`): ids hash into
     ``n_blocks`` blocks, each of the (B²+B)/2 block pairs becomes one
@@ -209,9 +209,9 @@ def _blocked_sides(collection: DataFrame, n_blocks: int, id_col: str, vec_col: s
     of the collection, the widest rows in the plan)."""
     spark = collection.sparkSession
     e = collection.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("blk"),
     )
     block_pairs = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
     bp = spark.createDataFrame(block_pairs, "bi int, bj int")
@@ -228,15 +228,12 @@ def ivf_topk(
     collection: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_cells: int = 16,
     n_probe: int = 4,
     n_assign: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF approximate top-k: coarse-quantize the collection into
-    ``n_cells`` centroid cells, probe each query's ``n_probe`` nearest
-    cells, exact-rerank the candidates.
+    """IVF approximate top-k: coarse-quantize the collection into 16
+    centroid cells, probe each query's ``n_probe`` nearest cells,
+    exact-rerank the candidates.
 
     ``n_assign`` > 1 indexes each collection vector in its ``n_assign``
     nearest cells (standard IVF redundancy / spill assignment): storage
@@ -246,21 +243,21 @@ def ivf_topk(
 
     Scale path: cell assignment is one numpy matmul per Arrow batch; the
     candidate join is an equi join on the cell id against a broadcast
-    query batch, scanning ~n_assign·n_probe/n_cells of the collection
+    query batch, scanning ~n_assign·n_probe/16 of the collection
     per query. In a production lakehouse the collection is written
     ``partitionBy(cell)`` so a query batch becomes a partition-pruned
     scan (the Spark analogue of an IVF inverted list)."""
-    cents = train_ivf_centroids(collection, n_cells, id_col=id_col, vec_col=vec_col)
+    cents = train_ivf_centroids(collection)
     if cents.size == 0:
-        return _empty_topk_result(collection, queries, id_col)
+        return _empty_topk_result(collection, queries)
 
     if n_assign == 1:
         # single assignment shares THE cell rule with the at-rest layout
         # writer (layout.write_embeddings_by_cell) via nearest_cell_udf
-        cell_col = nearest_cell_udf(cents)(F.col(vec_col)).alias("cell")
+        cell_col = nearest_cell_udf(cents)(F.col("embedding")).alias("cell")
     else:
         cell_col = F.explode(
-            topcells_udf(cents, n_assign)(F.col(vec_col))
+            topcells_udf(cents, n_assign)(F.col("embedding"))
         ).alias("cell")
     # norms attached alongside the cell generator: the generator's
     # sibling expressions are evaluated once per INPUT row and carried
@@ -268,16 +265,16 @@ def ivf_topk(
     # vector instead of once per (pair × probed cell) — see
     # _cosine_prenorm for the bit-identity argument
     c = collection.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        norm(F.col("embedding")).alias("c_norm"),
         cell_col,
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
-        F.explode(topcells_udf(cents, n_probe)(F.col(vec_col))).alias("cell"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        norm(F.col("embedding")).alias("q_norm"),
+        F.explode(topcells_udf(cents, n_probe)(F.col("embedding"))).alias("cell"),
     )
     cand = c.join(F.broadcast(q), "cell").filter(
         F.col("neighbor_id") != F.col("query_id")
@@ -297,11 +294,9 @@ def ivf_topk(
     )
 
 
-def covariance_matrix(
-    collection: DataFrame, vec_col: str = "embedding"
-) -> tuple[np.ndarray, int]:
-    """Distributed d×d covariance of a vector column, returned to the
-    driver as ``(cov, n)``.
+def covariance_matrix(collection: DataFrame) -> tuple[np.ndarray, int]:
+    """Distributed d×d covariance of the ``embedding`` column, returned
+    to the driver as ``(cov, n)``.
 
     The heavy pass is fully distributed: one ``mapInPandas`` over the
     collection emits per-Arrow-batch sufficient statistics — count,
@@ -312,7 +307,7 @@ def covariance_matrix(
     of collection size), where cov = XᵀX/n − x̄x̄ᵀ is assembled. The
     vectors themselves are never shuffled — the sole exchange carries
     d²-sized partials, one per input partition."""
-    cells = collection.select(F.col(vec_col).alias("v")).mapInPandas(
+    cells = collection.select(F.col("embedding").alias("v")).mapInPandas(
         _cov_partials, "kind string, i int, j int, val double"
     )
     rows = (
@@ -363,33 +358,22 @@ def train_pq_codebooks(
     collection: DataFrame,
     m_sub: int = 4,
     n_codes: int = 16,
-    sample_size: int = 2048,
-    n_iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 43,
 ) -> np.ndarray:
     """Product-quantization codebooks, (m_sub, n_codes, subdim): Lloyd's
-    per subspace over the same seeded-hash TakeOrdered sample rule as
-    :func:`train_ivf_centroids` (bounded driver-side training, unbiased
-    under id/content correlation, deterministic)."""
-    rows = (
-        collection.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col("id"), F.lit(seed)), F.col("id"))
-        .limit(sample_size)
-        .collect()
-    )
-    if not rows:
+    per subspace over :func:`_training_sample`, the same bounded,
+    deterministic sample rule as :func:`train_ivf_centroids`."""
+    m = _training_sample(collection, seed)
+    if not len(m):
         return np.zeros((0, 0, 0))
-    m = np.array([r.v for r in rows], dtype=np.float64)
     # a sample smaller than n_codes trains fewer codes — the book is
     # trimmed, never zero-padded (phantom all-zero centroids would win
     # assignments near the origin and carry a zero reconstruction norm);
     # _pq_lloyd's k_eff handles it
-    return _pq_lloyd(m, m_sub, n_codes, n_iters, np.random.RandomState(seed))
+    return _pq_lloyd(m, m_sub, n_codes, np.random.RandomState(seed))
 
 
-def _pq_lloyd(m: np.ndarray, m_sub: int, n_codes: int, n_iters: int, rng) -> np.ndarray:
+def _pq_lloyd(m: np.ndarray, m_sub: int, n_codes: int, rng) -> np.ndarray:
     """Per-subspace Lloyd's over an in-memory sample — the shared inner
     trainer of :func:`train_pq_codebooks` and :func:`train_opq`."""
     subdim = m.shape[1] // m_sub
@@ -398,7 +382,7 @@ def _pq_lloyd(m: np.ndarray, m_sub: int, n_codes: int, n_iters: int, rng) -> np.
     for s in range(m_sub):
         sub = m[:, s * subdim : (s + 1) * subdim]
         cents = sub[rng.choice(len(sub), size=k_eff, replace=False)]
-        for _ in range(n_iters):
+        for _ in range(_TRAIN_ITERS):
             d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
             for c in range(len(cents)):
@@ -426,11 +410,6 @@ def train_opq(
     collection: DataFrame,
     m_sub: int = 4,
     n_codes: int = 16,
-    sample_size: int = 2048,
-    n_iters: int = 10,
-    opq_iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 44,
 ) -> tuple[np.ndarray, np.ndarray]:
     """OPQ — Optimized Product Quantization (Ge et al., CVPR 2013,
@@ -438,7 +417,8 @@ def train_opq(
     re-mixes coordinates across PQ subspaces before quantization, so
     correlated dimensions stop landing in the same subspace and the
     codebooks spend their bits where the variance is. Returns
-    ``(R [dim×dim], books [m_sub, k, subdim])`` trained by alternating
+    ``(R [dim×dim], books [m_sub, k, subdim])`` trained by four rounds
+    of alternating
 
     1. PQ codebooks on the rotated sample  X·R   (Lloyd's per subspace),
     2. the orthogonal Procrustes solve  R = U·Vᵀ  from  SVD(Xᵀ·Y)
@@ -446,35 +426,26 @@ def train_opq(
        argmin_R ‖X·R − Y‖_F over orthogonal matrices.
 
     Scale shape: training is bounded driver-side numpy over the SAME
-    seeded-hash TakeOrdered sample rule as the IVF/PQ trainers
-    (sample_size × dim, never the collection); the learned R (dim², a
-    few KB) and books broadcast to executors, where rotation +
-    assignment are one vectorized pass per Arrow batch. Deterministic:
+    :func:`_training_sample` as the IVF/PQ trainers (``_TRAIN_SAMPLE`` ×
+    dim, never the collection); the learned R (dim², a few KB) and books
+    broadcast to executors, where rotation + assignment are one
+    vectorized pass per Arrow batch. Deterministic:
     fixed seed, fixed iteration counts, LAPACK SVD on identical input.
     """
-    rows = (
-        collection.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col("id"), F.lit(seed)), F.col("id"))
-        .limit(sample_size)
-        .collect()
-    )
-    if not rows:
+    x = _training_sample(collection, seed)
+    if not len(x):
         return np.zeros((0, 0)), np.zeros((0, 0, 0))
-    x = np.array([r.v for r in rows], dtype=np.float64)
-    dim = x.shape[1]
-    r_mat = np.eye(dim)
-    if opq_iters < 1:  # degenerate request: plain PQ under identity
-        return r_mat, _pq_lloyd(x, m_sub, n_codes, n_iters, np.random.RandomState(seed))
-    for _ in range(opq_iters):
+    r_mat = np.eye(x.shape[1])
+    for _ in range(4):
         xr = x @ r_mat
-        books = _pq_lloyd(xr, m_sub, n_codes, n_iters, np.random.RandomState(seed))
+        books = _pq_lloyd(xr, m_sub, n_codes, np.random.RandomState(seed))
         y = _pq_reconstruct(xr, books)
         u, _, vt = np.linalg.svd(x.T @ y)
         r_mat = u @ vt
     # end the alternation on a codebook step so the returned pair is
     # consistent: books trained under the FINAL rotation, not the
     # previous iteration's
-    books = _pq_lloyd(x @ r_mat, m_sub, n_codes, n_iters, np.random.RandomState(seed))
+    books = _pq_lloyd(x @ r_mat, m_sub, n_codes, np.random.RandomState(seed))
     return r_mat, books
 
 
@@ -500,14 +471,11 @@ def ivf_pq_topk(
     collection: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_cells: int = 16,
     n_probe: int = 4,
     n_assign: int = 1,
     m_sub: int = 4,
     n_codes: int = 16,
     rerank: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ approximate top-k — the FAISS-style composed index as
     DataFrame ops: IVF cells prune WHICH vectors are candidates, PQ
@@ -526,14 +494,10 @@ def ivf_pq_topk(
     is exactly why PQ exists. Non-residual PQ (codes quantize the raw
     vector, not the cell residual): one shared codebook, the standard
     shallow-cell variant."""
-    cents = train_ivf_centroids(
-        collection, n_cells, id_col=id_col, vec_col=vec_col
-    )
-    books = train_pq_codebooks(
-        collection, m_sub=m_sub, n_codes=n_codes, id_col=id_col, vec_col=vec_col
-    )
+    cents = train_ivf_centroids(collection)
+    books = train_pq_codebooks(collection, m_sub=m_sub, n_codes=n_codes)
     if cents.size == 0 or books.size == 0:
-        return _empty_topk_result(collection, queries, id_col)
+        return _empty_topk_result(collection, queries)
     k_codes = books.shape[1]  # may be < n_codes on a tiny sample
     flat_norm2 = [
         float((books[s, c] ** 2).sum()) for s in range(m_sub) for c in range(k_codes)
@@ -551,19 +515,19 @@ def ivf_pq_topk(
         return pd.Series(list(tabs))
 
     if n_assign == 1:
-        cell_col = nearest_cell_udf(cents)(F.col(vec_col)).alias("cell")
+        cell_col = nearest_cell_udf(cents)(F.col("embedding")).alias("cell")
     else:
-        cell_col = F.explode(topcells_udf(cents, n_assign)(F.col(vec_col))).alias("cell")
+        cell_col = F.explode(topcells_udf(cents, n_assign)(F.col("embedding"))).alias("cell")
     c = collection.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         cell_col,
-        pq_codes_udf(books)(F.col(vec_col)).alias("codes"),
+        pq_codes_udf(books)(F.col("embedding")).alias("codes"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(topcells_udf(cents, n_probe)(F.col(vec_col))).alias("cell"),
-        adc_table(F.col(vec_col)).alias("qtab"),
-        norm(F.col(vec_col)).alias("q_norm"),
+        F.col("vec_id").alias("query_id"),
+        F.explode(topcells_udf(cents, n_probe)(F.col("embedding"))).alias("cell"),
+        adc_table(F.col("embedding")).alias("qtab"),
+        norm(F.col("embedding")).alias("q_norm"),
     )
     cand = c.join(F.broadcast(q), "cell").filter(
         F.col("neighbor_id") != F.col("query_id")
@@ -602,14 +566,14 @@ def ivf_pq_topk(
     # exact rerank: raw vectors fetched ONLY for the shortlist; norms
     # pre-folded per row (see _cosine_prenorm)
     qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        norm(F.col("embedding")).alias("q_norm"),
     )
     cv = collection.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        norm(F.col("embedding")).alias("c_norm"),
     )
     scored = (
         shortlist.join(cv, "neighbor_id")
@@ -629,25 +593,22 @@ def ivf_pq_topk(
 def cosine_neardup_pairs(
     collection: DataFrame,
     threshold: float = 0.4,
-    n_blocks: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact all-pairs embedding near-dup: every (doc_a < doc_b) pair with
     cosine ≥ threshold.
 
     Blocked similarity join: ids hash into B blocks; each of the (B²+B)/2
     block pairs becomes one ``applyInPandas`` group whose pairwise scores
-    are a single numpy matmul over the Arrow batch. ``n_blocks`` defaults
-    to ``ceil(n / _BLOCK_TARGET_ROWS)`` from an actual count, so block
+    are a single numpy matmul over the Arrow batch. B is
+    ``ceil(n / _BLOCK_TARGET_ROWS)`` from an actual count, so block
     SIZE — and with it per-task memory — is the invariant as the
     collection grows; work and shuffle stay evenly distributed
     (replication factor ≈ B per row, the unavoidable cost of an exact
     quadratic join). For corpora where exact O(n²) is infeasible, use
     :func:`ann_topk` (LSH) or MinHash instead.
     """
-    collection, n_blocks = _derived_n_blocks(collection, n_blocks)
-    sides = _blocked_sides(collection, n_blocks, id_col, vec_col)
+    collection, n_blocks = _derived_n_blocks(collection, None)
+    sides = _blocked_sides(collection, n_blocks)
 
     def score_block_pair(key, pdf):
         bi, bj = key
@@ -682,9 +643,7 @@ def cosine_neardup_pairs(
     )
 
 
-def sign_signature(
-    vecs: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def sign_signature(vecs: DataFrame) -> DataFrame:
     """1-bit (sign) quantization of a 64-dim embedding into ONE int64
     word: bit d set iff v_d > 0. The 32× compression (8 B vs 256 B of
     float32) that makes a 100 TB vector corpus scannable from memory —
@@ -701,9 +660,9 @@ def sign_signature(
     shortlists with garbage). Shorter vectors zero-pad (NULL value
     slots take the 0 branch: ``NULL > 0`` is NULL → ELSE)."""
     sig = F.expr(
-        f"""
+        """
         aggregate(
-          zip_with(slice({vec_col}, 1, 64), sequence(0, 63),
+          zip_with(slice(embedding, 1, 64), sequence(0, 63),
                    (v, d) -> CASE WHEN v > CAST(0 AS DOUBLE)
                                   THEN shiftleft(CAST(1 AS BIGINT), CAST(d AS INT))
                                   ELSE CAST(0 AS BIGINT) END),
@@ -711,7 +670,7 @@ def sign_signature(
         """
     )
     return vecs.select(
-        F.col(id_col), F.col(vec_col), sig.alias("sign_sig")
+        F.col("vec_id"), F.col("embedding"), sig.alias("sign_sig")
     )
 
 
@@ -720,8 +679,6 @@ def binary_topk(
     queries: DataFrame,
     k: int = 10,
     rerank: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via 1-bit quantization: scan Hamming distance
     over 64-bit sign signatures (one XOR+popcount per vector — the
@@ -736,16 +693,16 @@ def binary_topk(
     k·rerank shortlist — the memory-bandwidth shape (not an index
     build) that keeps brute-force viable, and composable with IVF
     cell pruning for the compute cut."""
-    csig = sign_signature(collection, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
+    csig = sign_signature(collection).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        norm(F.col("embedding")).alias("c_norm"),
         F.col("sign_sig").alias("c_sig"),
     )
-    qsig = sign_signature(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
+    qsig = sign_signature(queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        norm(F.col("embedding")).alias("q_norm"),
         F.col("sign_sig").alias("q_sig"),
     )
     cand = csig.join(
@@ -774,8 +731,6 @@ def knn_graph(
     collection: DataFrame,
     k: int = 3,
     n_blocks: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact k-nearest-neighbor graph: for EVERY vector, its k most
     cosine-similar other vectors — the all-to-all sibling of
@@ -798,7 +753,7 @@ def knn_graph(
     is the scale path.
     """
     collection, n_blocks = _derived_n_blocks(collection, n_blocks)
-    sides = _blocked_sides(collection, n_blocks, id_col, vec_col)
+    sides = _blocked_sides(collection, n_blocks)
 
     def local_topk(key, pdf):
         bi, bj = key
@@ -856,7 +811,7 @@ def knn_graph(
         cand.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("vec_id"),
             "neighbor_id",
             F.round("cos_raw", 4).alias("cosine"),
             "rk",
@@ -864,8 +819,8 @@ def knn_graph(
     )
 
 
-def _planes(n_tables: int, n_bits: int, dim: int, seed: int = 42) -> list[list[list[float]]]:
-    rng = np.random.RandomState(seed)
+def _planes(n_tables: int, n_bits: int, dim: int) -> list[list[list[float]]]:
+    rng = np.random.RandomState(42)
     return rng.standard_normal((n_tables, n_bits, dim)).tolist()
 
 
@@ -874,34 +829,32 @@ def ann_topk(
     queries: DataFrame,
     k: int = 10,
     n_tables: int = 16,
-    n_bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: LSH candidate generation + exact rerank.
 
     Shuffle pattern: both sides hash into (table, signature) buckets; the
     join is an equi join on the bucket key — never a cross join. Recall
-    rises with n_tables, candidate-set selectivity with n_bits.
+    rises with n_tables, candidate-set selectivity with the bits per
+    signature.
 
-    Defaults (4 bits × 16 tables → recall ≈0.98 on the uniform-random
+    ``LSH_BITS`` × 16 tables (4 × 16 → recall ≈0.98 on the uniform-random
     fixture embeddings, ANN's worst case) suit near-orthogonal vectors;
-    real embedding corpora with neighbor cosines ≳0.8 should RAISE n_bits
-    (8–16) for far smaller candidate sets at the same recall — p(bit
-    match) = 1 − θ/π governs the tradeoff.
+    real embedding corpora with neighbor cosines ≳0.8 want 8–16 bits for
+    far smaller candidate sets at the same recall — p(bit match) =
+    1 − θ/π governs the tradeoff.
     """
-    # (n_tables*n_bits, DIM) plane matrix: all signatures for a batch of
+    # (n_tables*LSH_BITS, DIM) plane matrix: all signatures for a batch of
     # vectors are one numpy matmul — Arrow-vectorized, ~100x faster than
     # evaluating 64 interpreted zip_with/aggregate dot products per row
-    plane_mat = np.asarray(_planes(n_tables, n_bits, DIM)).reshape(n_tables * n_bits, DIM)
-    bit_weights = 1 << np.arange(n_bits - 1, -1, -1)  # first plane = MSB
+    plane_mat = np.asarray(_planes(n_tables, LSH_BITS, DIM)).reshape(n_tables * LSH_BITS, DIM)
+    bit_weights = 1 << np.arange(LSH_BITS - 1, -1, -1)  # first plane = MSB
 
     @pandas_udf("array<long>")
     def table_sigs(vecs: pd.Series) -> pd.Series:
         m = np.array(vecs.tolist(), dtype=np.float64)  # (batch, DIM)
-        bits = (m @ plane_mat.T) >= 0  # (batch, n_tables*n_bits)
+        bits = (m @ plane_mat.T) >= 0  # (batch, n_tables*LSH_BITS)
         sigs = (
-            bits.reshape(-1, n_tables, n_bits) * bit_weights
+            bits.reshape(-1, n_tables, LSH_BITS) * bit_weights
         ).sum(axis=2)  # (batch, n_tables)
         return pd.Series(list(sigs.astype(np.int64)))
 
@@ -917,14 +870,14 @@ def ann_topk(
     # projection (a small parquet file scans as one partition) and reuse
     # the same exchange for signature generation and the rerank join
     c_base = collection.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        norm(F.col("embedding")).alias("c_norm"),
     ).repartition("neighbor_id")
     q_base = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        norm(F.col("embedding")).alias("q_norm"),
     )
     c = with_sigs(c_base, "neighbor_id", "c_vec")
     q = with_sigs(q_base, "query_id", "q_vec")

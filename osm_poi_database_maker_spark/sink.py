@@ -97,7 +97,6 @@ def write_copy_postgres_cli(
     user: str,
     table: str,
     columns: Sequence[str] = NODE_COPY_COLUMNS,
-    geom_column: str = "geom",
 ) -> None:
     """Bulk-load via one ``psql``-driven COPY stream per partition: each
     executor partition pipes its rendered text lines
@@ -109,7 +108,7 @@ def write_copy_postgres_cli(
     ``df.repartition(n)`` controls the fan-in."""
     import subprocess
 
-    stmt = copy_statement(table, columns, geom_column)
+    stmt = copy_statement(table, columns)
     lines = render_copy_rows(df, columns)
 
     def _write_partition(rows: Iterator) -> None:
@@ -167,13 +166,13 @@ def write_jdbc(
     )
 
 
-def write_routed(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_routed(df: DataFrame, path: str) -> None:
     """O16 partitioned sink (reference routes rows to nodes vs ways
     tables, filter.py:185-211): one write, ``partitionBy("osm_type")``,
     each entity type in its own directory. Readers of a single type get
     partition pruning for free (`WHERE osm_type = 'node'` never touches
     way files)."""
-    df.write.partitionBy("osm_type").mode(mode).parquet(path)
+    df.write.partitionBy("osm_type").mode("overwrite").parquet(path)
 
 
 def merge_upsert(

@@ -71,9 +71,7 @@ KM_PER_DEG = 111.19505197490699  # = 2*pi*geo.EARTH_RADIUS_M/360/1000
 MAX_LON_REACH = 64
 
 
-def neighbor_cells(
-    lon: Column, lat: Column, res: int = GRID_RES, radius_km: float | None = None
-) -> Column:
+def neighbor_cells(lon: Column, lat: Column, radius_km: float | None = None) -> Column:
     """Neighborhood of a point's grid cell as a distinct cell-id array —
     the probe side of a grid-bucketed distance join.
 
@@ -88,7 +86,7 @@ def neighbor_cells(
     res 12). Reach is capped at ``MAX_LON_REACH`` (polar-cap residual
     documented above). Edge cells clamp — out-of-range neighbors drop
     out via NULL + filter; the grid does not wrap at ±180°."""
-    n = 1 << res
+    n = 1 << GRID_RES
     ix = _quantize(lon, 180.0, 360.0, n)
     iy = _quantize(lat, 90.0, 180.0, n)
     if radius_km is None:
@@ -106,7 +104,7 @@ def neighbor_cells(
     if radius_km > lat_edge_km:
         raise ValueError(
             f"radius {radius_km} km exceeds the lat cell edge "
-            f"{lat_edge_km:.2f} km at res={res}; lower the radius or res"
+            f"{lat_edge_km:.2f} km at res={GRID_RES}; lower the radius"
         )
     # the partner may sit up to radius_km pole-ward of the probe, where
     # lon cells are NARROWER — size the reach from the worst (smallest)
@@ -149,16 +147,15 @@ def neighbor_cells(
     )
 
 
-def zorder_key(lon: Column, lat: Column, bits: int = 16) -> Column:
-    """Morton (Z-order) interleave of the quantized coordinates — a
-    1-D sort key whose ordering keeps 2-D neighbors close, so parquet
-    row-group min/max stats prune tightly after
+def zorder_key(lon: Column, lat: Column) -> Column:
+    """Morton (Z-order) interleave of the coordinates quantized to 16
+    bits each — a 1-D sort key whose ordering keeps 2-D neighbors close,
+    so parquet row-group min/max stats prune tightly after
     ``sortWithinPartitions``. Pure bit-arithmetic expressions."""
-    n = 1 << bits
-    ix = _quantize(lon, 180.0, 360.0, n)
-    iy = _quantize(lat, 90.0, 180.0, n)
+    ix = _quantize(lon, 180.0, 360.0, 1 << 16)
+    iy = _quantize(lat, 90.0, 180.0, 1 << 16)
     key = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(16):
         key = (
             key
             + F.shiftleft(F.shiftright(ix, b).bitwiseAND(F.lit(1)), 2 * b)
@@ -167,26 +164,18 @@ def zorder_key(lon: Column, lat: Column, bits: int = 16) -> Column:
     return key
 
 
-def with_spatial_keys(
-    df: DataFrame, lon_col: str = "lon", lat_col: str = "lat", res: int = GRID_RES
-) -> DataFrame:
-    return df.withColumn("cell", grid_cell(F.col(lon_col), F.col(lat_col), res)).withColumn(
-        "zkey", zorder_key(F.col(lon_col), F.col(lat_col))
+def with_spatial_keys(df: DataFrame) -> DataFrame:
+    return df.withColumn("cell", grid_cell(F.col("lon"), F.col("lat"))).withColumn(
+        "zkey", zorder_key(F.col("lon"), F.col("lat"))
     )
 
 
-def cluster_spatially(
-    df: DataFrame,
-    num_partitions: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int = GRID_RES,
-) -> DataFrame:
+def cluster_spatially(df: DataFrame, num_partitions: int) -> DataFrame:
     """Physically cluster for a spatial table at rest: range-partition by
     cell (keeps a cell's rows together → partition pruning), Z-order
     within partitions (tight row-group stats). Write the result with
     ``partitionBy`` omitted — the layout itself carries the locality."""
-    keyed = with_spatial_keys(df, lon_col, lat_col, res)
+    keyed = with_spatial_keys(df)
     return keyed.repartitionByRange(num_partitions, "cell").sortWithinPartitions(
         "cell", "zkey"
     )
@@ -198,9 +187,6 @@ def bbox_filter(
     min_lat: float,
     max_lon: float,
     max_lat: float,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int = GRID_RES,
 ) -> DataFrame:
     """Bbox query with cell pruning expressed as RANGE predicates, not an
     IN-list: a bbox covers a rectangle [x0..x1]×[y0..y1] of grid cells,
@@ -211,11 +197,11 @@ def bbox_filter(
     IN-list — a plan-size and codegen blowup. Use
     :func:`cells_for_bbox` (IN-list) only for small covers, e.g.
     partition pruning over a partitionBy(cell) layout."""
-    n = 1 << res
+    n = 1 << GRID_RES
     x0, x1 = _quantize_scalar(min_lon, 180.0, 360.0, n), _quantize_scalar(max_lon, 180.0, 360.0, n)
     y0, y1 = _quantize_scalar(min_lat, 90.0, 180.0, n), _quantize_scalar(max_lat, 90.0, 180.0, n)
-    lon, lat = F.col(lon_col), F.col(lat_col)
-    cell = grid_cell(lon, lat, res)
+    lon, lat = F.col("lon"), F.col("lat")
+    cell = grid_cell(lon, lat)
     return df.filter(
         cell.between(x0 * n + y0, x1 * n + y1)
         & F.floor(cell / n).between(x0, x1)

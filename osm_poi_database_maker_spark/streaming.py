@@ -66,12 +66,12 @@ def stream_events(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
     return normalize_events_ts(df)
 
 
-def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = "10 minutes") -> DataFrame:
+def windowed_counts(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window aggregate — streaming twin of
     queries/events.q_events_hourly_window (same expressions)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(
             F.unix_micros(F.col("w.start")).alias("window_start_us"),
@@ -82,9 +82,7 @@ def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = 
     )
 
 
-def ohlc_bars(
-    events: DataFrame, window: str = "1 hour", watermark: str = "10 minutes"
-) -> DataFrame:
+def ohlc_bars(events: DataFrame) -> DataFrame:
     """Watermarked hourly OHLC bars — streaming twin of
     queries/events.q_events_ohlc_bars. The ordering key and all six
     aggregate expressions are IMPORTED from the batch operator
@@ -94,15 +92,13 @@ def ohlc_bars(
     min, so they run in a streaming window agg with no custom state.
 
     The bar label is minute-precision ``HH:mm`` derived from the window
-    struct's actual start — for the default 1-hour window that renders
-    identically to the batch twin's ``date_trunc('hour') → HH:00``, and
-    for sub-hour windows (e.g. '15 minutes') each window gets its own
-    correct label instead of collapsing onto the hour (r5 advice)."""
+    struct's actual start, which for the 1-hour window renders
+    identically to the batch twin's ``date_trunc('hour') → HH:00``."""
     from .queries.events import ohlc_aggregates
 
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(*ohlc_aggregates())
         .select(
             "event_type",
@@ -127,12 +123,12 @@ def sliding_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_counts(events: DataFrame) -> DataFrame:
     """Per-user session windows (streaming session_window requires a
-    watermark; merges events with gaps under ``gap``)."""
+    watermark; merges events with gaps under 30 minutes)."""
     return (
         events.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(
             "user_id",
@@ -143,10 +139,11 @@ def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Late-duplicate suppression: state bounded by the watermark horizon
-    (vs dropDuplicates whose state grows without bound on a stream)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
+def dedup_within_watermark(events: DataFrame) -> DataFrame:
+    """Late-duplicate suppression: state bounded by the 1-hour watermark
+    horizon (vs dropDuplicates whose state grows without bound on a
+    stream)."""
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(["event_id"])
 
 
 _STATE_SCHEMA = "n long, total double"
@@ -219,7 +216,7 @@ def _kmv_update(k: int):
     return update
 
 
-def kmv_sketch_state(events: DataFrame, k: int = 64) -> DataFrame:
+def kmv_sketch_state(events: DataFrame) -> DataFrame:
     """Streaming KMV distinct-count sketch per event_type — the custom-
     state twin of queries/events.q_events_kmv_distinct. State per key is
     the K smallest Lehmer hashes of the users seen so far (KMV's merge
@@ -234,11 +231,13 @@ def kmv_sketch_state(events: DataFrame, k: int = 64) -> DataFrame:
     point of KMV on an unbounded stream (exact distinct would grow with
     the user universe); hashing is vectorized numpy over each Arrow
     batch; keys shard across the cluster's state stores."""
+    from .queries.events import _KMV_K
+
     return (
         events.select("event_type", "user_id")
         .groupBy("event_type")
         .applyInPandasWithState(
-            _kmv_update(k),
+            _kmv_update(_KMV_K),
             outputStructType=_KMV_OUT_SCHEMA,
             stateStructType=_KMV_STATE_SCHEMA,
             outputMode="update",
@@ -985,45 +984,39 @@ def static_enriched_counts(events: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-def stream_stream_attribution(
-    events: DataFrame,
-    click_type: str = "click",
-    purchase_type: str = "purchase",
-    horizon: str = "2 hours",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def stream_stream_attribution(events: DataFrame) -> DataFrame:
     """Stream-stream inner join: attribute each purchase to the SAME
-    user's click within ``horizon`` before it.
+    user's click within 2 hours before it (1-hour watermarks).
 
     Both sides carry watermarks and the join condition bounds event time
     on both ends, so Spark can expire join state — the required shape
     for unbounded streams (an unbounded-range condition would grow state
     forever). Output: one row per (click, purchase) pair in range."""
     clicks = (
-        events.filter(F.col("event_type") == click_type)
+        events.filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", "1 hour")
     )
     purchases = (
-        events.filter(F.col("event_type") == purchase_type)
+        events.filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("purchase_ts"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", "1 hour")
     )
     return (
         purchases.join(
             clicks,
             (F.col("p_user") == F.col("c_user"))
             & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}")),
+            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 2 hours")),
         )
         .select(
             "purchase_id",
@@ -1224,7 +1217,7 @@ def _cusum_update(k_sd: float, h_sd: float):
     return update
 
 
-def cusum_state(events: DataFrame, k_sd: float = 0.5, h_sd: float = 4.0) -> DataFrame:
+def cusum_state(events: DataFrame) -> DataFrame:
     """Streaming CUSUM changepoint detection — the custom-state twin of
     queries/events.q_events_cusum_changepoints. State per event type is
     the OBSERVED-HOUR rollup (hour → count), never the events (the
@@ -1239,13 +1232,15 @@ def cusum_state(events: DataFrame, k_sd: float = 0.5, h_sd: float = 4.0) -> Data
     selection can LOWER the flag set when new data de-flags an hour
     (more history shifts mu/sd — a flag is a statement about the
     prefix, not an immutable event)."""
+    from .queries.events import _CUSUM_H_SD, _CUSUM_K_SD
+
     prepped = events.select(
         "event_type",
         F.floor(F.unix_micros("ts") / 3_600_000_000).alias("hi"),
         F.lit(1).alias("c"),
     )
     return prepped.groupBy("event_type").applyInPandasWithState(
-        _cusum_update(k_sd, h_sd),
+        _cusum_update(_CUSUM_K_SD, _CUSUM_H_SD),
         outputStructType=_CUSUM_OUT_SCHEMA,
         stateStructType=_CUSUM_STATE_SCHEMA,
         outputMode="update",
@@ -1472,7 +1467,7 @@ def _kmv_day_update(k: int):
     return update
 
 
-def kmv_daily_sketch_state(events: DataFrame, k: int = 64) -> DataFrame:
+def kmv_daily_sketch_state(events: DataFrame) -> DataFrame:
     """Continuously-maintained per-day KMV sketches — the streaming
     state behind the trailing-window distinct rollup
     (queries/events.q_events_kmv_rolling_distinct): the stream keeps K
@@ -1480,11 +1475,13 @@ def kmv_daily_sketch_state(events: DataFrame, k: int = 64) -> DataFrame:
     window is set algebra on the emitted day sketches. Day extraction
     runs declaratively before the stateful op so state-store sharding
     keys on a real column."""
+    from .queries.events import _KMV_K
+
     prepped = events.select(
         F.unix_date(F.to_date("ts")).alias("day"), "user_id"
     )
     return prepped.groupBy("day").applyInPandasWithState(
-        _kmv_day_update(k),
+        _kmv_day_update(_KMV_K),
         outputStructType=_KMV_DAY_OUT_SCHEMA,
         stateStructType=_KMV_DAY_STATE_SCHEMA,
         outputMode="update",
@@ -1659,25 +1656,23 @@ def _mg_shard_update(k: int):
     return update
 
 
-def mg_heavy_hitters_state(
-    documents: DataFrame, k: int = 64, shards: int = 8
-) -> DataFrame:
+def mg_heavy_hitters_state(documents: DataFrame) -> DataFrame:
     """Continuously-maintained heavy-hitter candidates — the streaming
     twin of queries/text.q_doc_heavy_hitters' sketch phase. State is
-    ≤ K counters per shard (K·shards strings TOTAL, forever — never
-    per-token), sharded by token hash so the per-shard MG superset
-    guarantee covers the global stream. Emissions carry the full
-    candidate array so the shared finalizer (queries/text.mg_finalize)
-    can exact-recount them against the corpus and the batch DuckDB
-    oracle certifies the result end-to-end."""
-    from .queries.text import corpus_tokens
+    ≤ K = ``_MG_K`` counters in each of 8 shards (8·K strings TOTAL,
+    forever — never per-token), sharded by token hash so the per-shard
+    MG superset guarantee covers the global stream. Emissions carry the
+    full candidate array so the shared finalizer
+    (queries/text.mg_finalize) can exact-recount them against the corpus
+    and the batch DuckDB oracle certifies the result end-to-end."""
+    from .queries.text import _MG_K, corpus_tokens
 
     toks = corpus_tokens(documents)
     sharded = toks.select(
-        F.pmod(F.xxhash64("w"), F.lit(shards)).alias("shard"), "w"
+        F.pmod(F.xxhash64("w"), F.lit(8)).alias("shard"), "w"
     )
     return sharded.groupBy("shard").applyInPandasWithState(
-        _mg_shard_update(k),
+        _mg_shard_update(_MG_K),
         outputStructType=_MG_OUT_SCHEMA,
         stateStructType=_MG_STATE_SCHEMA,
         outputMode="update",
@@ -1896,7 +1891,6 @@ def _pop16():
 
 def simhash_dedup_state(
     documents: DataFrame,
-    max_hamming: int = 3,
     bucket_cap: int = 200,
     generation_span: int | None = None,
 ) -> DataFrame:
@@ -1946,7 +1940,7 @@ def simhash_dedup_state(
         "doc_id", "sig", F.explode(bands).alias("b")
     ).select("doc_id", "sig", F.col("b.band").alias("band"), F.col("b.val").alias("val"))
     return banded.groupBy("band", "val").applyInPandasWithState(
-        _simdedup_update(max_hamming, bucket_cap, generation_span),
+        _simdedup_update(3, bucket_cap, generation_span),
         outputStructType=_SIMDEDUP_OUT_SCHEMA,
         stateStructType=_SIMDEDUP_STATE_SCHEMA,
         outputMode="update",

@@ -172,3 +172,37 @@ def test_cache_toi_dim_never_deletes_an_existing_directory(spark, tmp_path):
         cache_toi_dim(fx.taginfo_df(spark), SETTINGS, str(data))
     assert os.listdir(data) == ["notes.txt"]
     assert (data / "notes.txt").read_text() == "keep me\n"
+
+
+def _jobs_of(spark, fn):
+    sc = spark.sparkContext
+    gid = f"io-jobs-{os.getpid()}-{id(fn)}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_load_table_infers_the_schema_once(spark, tmp_path):
+    """Parquet schema inference is a Spark job; a second load_table of the
+    same table reuses the memoised schema and runs none, and rewriting
+    the fixture in place gives it a new key (and its new schema)."""
+    import shutil
+
+    from osm_poi_database_maker_spark.io import load_table
+    from tests.conftest import SF_SMOKE
+
+    sf = str(tmp_path)
+    shutil.copyfile(os.path.join(SF_SMOKE, "region.parquet"),
+                    os.path.join(sf, "region.parquet"))
+    first = load_table(spark, sf, "region")
+    assert _jobs_of(spark, lambda: load_table(spark, sf, "region")) == 0
+    assert load_table(spark, sf, "region").collect() == first.collect()
+
+    spark.range(3).selectExpr("id AS r_key").write.mode("overwrite").parquet(
+        os.path.join(sf, "region.parquet"))
+    rewritten = load_table(spark, sf, "region")
+    assert rewritten.columns == ["r_key"]
+    assert rewritten.count() == 3

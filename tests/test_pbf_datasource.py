@@ -120,3 +120,17 @@ def test_datasource_name_and_schema():
     assert OsmPbfDataSource.name() == "osmpbf"
     src = OsmPbfDataSource(options={"path": "x"})
     assert "osm_type string" in src.schema()
+
+
+def test_datasource_loads_a_path_list(spark, tmp_path):
+    """``.load([a, b])`` reaches the reader as the JSON ``paths`` option
+    (no ``path``); the source reads both files like read_pbf does."""
+    node = {"version": 1, "user_id": 7, "tstamp_ms": 1_700_000_000_000,
+            "changeset_id": 99, "tags": {}, "lon": 13.0, "lat": 52.0}
+    paths = [str(tmp_path / "a.osm.pbf"), str(tmp_path / "b.osm.pbf")]
+    for i, p in enumerate(paths):
+        pbf.encode_pbf(p, nodes=[dict(node, id=i + 1)])
+    register(spark)
+    via_source = spark.read.format("osmpbf").load(paths)
+    assert _canon(via_source) == _canon(pbf.read_pbf(spark, paths))
+    assert {r.id for r in via_source.collect()} == {1, 2}
