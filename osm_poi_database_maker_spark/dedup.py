@@ -55,7 +55,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .ops.recursion import fixpoint
+from .ops.recursion import fixpoint, local_fixpoint, pair_graph
 
 HASH_COUNT = 64
 DEFAULT_BANDS = 16  # 16 bands × 4 rows: catches jaccard ≳ 0.3 reliably
@@ -638,7 +638,19 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     the pair generator. The rounds run on ``ops.recursion.fixpoint``:
     each round's ``__chg`` flag (some label dropped) is observed by the
     job that materialises the round, and ``max_iters`` is its round cap,
-    so a non-converged run raises rather than returning bad labels."""
+    so a non-converged run raises rather than returning bad labels.
+
+    Below the broadcast bound (``ops.recursion.pair_graph``: at most
+    ``autoBroadcastJoinThreshold // 16`` pairs, integer keys, no null
+    end) the pairs are collected by one job and the same rounds run in
+    numpy on the driver (``ops.recursion.local_fixpoint``: same round 0,
+    same round rule, same cap and raise); the labels come back as a
+    local frame, so the build runs that one job instead of a job per
+    round."""
+    graph = pair_graph(pairs)
+    if graph is not None:
+        return _clusters(_components(pairs.sparkSession, graph, max_iters))
+
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
@@ -688,6 +700,40 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         max_iters,
         "dedup_clusters",
     )
+    return _clusters(labels)
+
+
+def _components(spark, graph, max_iters: int) -> DataFrame:
+    """:func:`dedup_clusters`' rounds in numpy over ``graph`` (from
+    ``ops.recursion.pair_graph``), on node indices, whose order is the
+    ids' order: ``(doc_id, label)`` as a local frame in the key type."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids, s, t, key = graph
+    # every node has an edge into it (the graph is symmetric), so each
+    # node's in-edges are one non-empty run of the edges sorted by target
+    order = np.argsort(t, kind="stable")
+    nbr, at = s[order], np.searchsorted(t[order], np.arange(len(ids)))
+
+    def step(label):
+        cand = np.minimum(label, np.minimum.reduceat(label[nbr], at))
+        cand = np.minimum(cand, label[label])
+        return cand, {"changed": bool((cand < label).any())}
+
+    label = local_fixpoint(
+        np.minimum(np.arange(len(ids)), np.minimum.reduceat(nbr, at)),
+        step,
+        lambda m: not m["changed"],
+        max_iters,
+        "dedup_clusters",
+    )
+    return spark.createDataFrame(
+        pa.table({"doc_id": ids, "label": ids[label]})
+    ).select(F.col("doc_id").cast(key), F.col("label").cast(key))
+
+
+def _clusters(labels: DataFrame) -> DataFrame:
     return labels.select(
         "doc_id",
         F.col("label").alias("cluster_id"),

@@ -1,39 +1,54 @@
-"""Recursive-query surface: one fixpoint loop, one small-graph BFS
-kernel, and the transitive closures of parent graphs built on them.
+"""Recursive-query surface: one fixpoint loop, the small-graph kernels,
+and the transitive closures of parent graphs built on them.
 
 Spark has no ``WITH RECURSIVE``; this module provides the standard
-substitution. Each closure has two paths, chosen by the size of its
-input edge set against the session's own
+substitution. Each closure, and each graph query of the package that
+iterates (the dedup connected components ``dedup.dedup_clusters``, and
+``queries/dedup``'s PageRank and k-core peel), has two paths, chosen by
+the size of its input edge set against the session's own
 ``spark.sql.autoBroadcastJoinThreshold``:
 
 - **Kernel** (the edges fit the threshold, at 16 bytes an edge: 4.19M
   edges at the engine session's 64 MB, 655k at Spark's default 10 MB).
-  One job collects the edges, numpy builds a CSR adjacency on the driver,
-  and ONE ``mapInArrow`` that carries it (broadcast above 1 MB) runs
-  over ``defaultParallelism`` strided slices of the nodes. Each slice
-  runs a level-synchronous multi-source BFS (:func:`_bfs`): BFS levels
-  are exact minimum distances, and the source is not marked visited,
-  so a cycle of length L yields its ``(n, n, L)`` self-row. One job
-  materialises the kernel's output and observes ``max(dist)`` (the
-  depth cap) and whether some node is its own ancestor (the functional
-  closure's cycle check), so the closure builds in two jobs. A round
-  loop costs several Spark jobs per round, and on graphs this size the
-  job overhead, not the data, is most of the cost. The bound is
-  measured, not assumed: on 4 cores the kernel builds the closure of a
-  150k-node, 300k-edge DAG (13M pairs) in about 6 s against 100–146 s
+  One job collects the edges (:func:`_small_graph`) and numpy indexes
+  them on the driver. A round loop costs one or more Spark jobs per
+  round, and on graphs this size the job overhead, not the data, is
+  most of the cost.
+
+  The closures build a CSR adjacency (the functional closure: a parent
+  vector), and ONE ``mapInArrow`` that carries it (broadcast above
+  1 MB) runs over ``defaultParallelism`` strided slices of the nodes
+  (:func:`_kernel`). For :func:`min_dist_closure` each slice runs a
+  level-synchronous multi-source BFS (:func:`_bfs`): BFS levels are
+  exact minimum distances, and the source is not marked visited, so a
+  cycle of length L yields its ``(n, n, L)`` self-row. For
+  :func:`ancestor_closure` each slice walks the parent vector
+  (:func:`_paths`) and emits one ``(node, path)`` row per node, the
+  loop path's state. One job materialises the kernel's output and
+  observes the depth cap and, for the functional closure, whether some
+  node is its own ancestor, so a closure builds in two jobs. The bound
+  is measured, not assumed: on 4 cores the kernel builds the closure of
+  a 150k-node, 300k-edge DAG (13M pairs) in about 6 s against 100–146 s
   for the loop, and the deepest input the default cap allows, a
   4096-node chain (8.4M pairs), no slower than the loop. Above the
   bound the loop pays for the probe, the collect of the first cap+1
   edges: about 2.3 s at 64 MB and 0.6 s at 10 MB, where the loop took
   10–146 s on the 300k-edge DAGs above.
-- **Loop** (more edges than that, or a threshold of -1):
-  :func:`fixpoint`, the one converge-or-raise round loop of the
-  package. Each round is one lazily checkpointed frame, materialised by
-  ONE job whose ``DataFrame.observe`` metrics answer "converged?" (and,
-  for the functional closure, "cycle?"), under a round cap that raises
-  "did not converge". The dedup connected components
-  (``dedup.dedup_clusters``) and the k-core peel
-  (``queries/dedup.q_doc_graph_kcore``) run on it too.
+
+  The graph queries take the undirected pair graph (:func:`pair_graph`)
+  and run their rounds in numpy on the driver, the converging ones
+  under :func:`local_fixpoint` (the same cap and raise as
+  :func:`fixpoint`); each returns an Arrow-built local frame, so it
+  builds in the one collect job.
+- **Loop** (more edges than that, a threshold of -1, or an edge with a
+  null end): :func:`fixpoint`, the one converge-or-raise round loop of
+  the package. Each round is one lazily checkpointed frame,
+  materialised by ONE job whose ``DataFrame.observe`` metrics answer
+  "converged?" (and, for the functional closure, "cycle?"), under a
+  round cap that raises "did not converge". The connected components
+  and the k-core peel run on it too; PageRank runs a fixed number of
+  iterations with no convergence flag, so its loop unrolls them, one
+  lazily checkpointed rank vector each.
 
 Where a recursive CTE walks one edge per pass (O(depth) sequential
 joins — at 100 TB depth-30 chains mean 30 shuffles), both loop closures
@@ -47,8 +62,8 @@ log2(max_depth) joins. Two closures, one per graph shape:
   node's first ancestors nearest first. A round joins every unfinished
   row to the state of the last ancestor on its path and appends that
   ancestor's path, so path length doubles while a round moves n rows,
-  not the n·depth closure. One ``posexplode`` expands the result at
-  the end.
+  not the n·depth closure. On both paths one lazy ``posexplode``
+  expands the result at the end.
 - :func:`min_dist_closure` — multi-parent DAGs (BOM graphs, category
   DAGs), where a pair is reachable along many paths. The loop path is
   semi-naive min doubling over
@@ -61,9 +76,9 @@ log2(max_depth) joins. Two closures, one per graph shape:
 Both paths keep ``max_rounds`` as the depth cap 2^max_rounds, and both
 raise at build time.
 
-Fixed-count loops (pagerank, BPE merges, k-means, farthest-point
-sampling) run a set number of rounds with no convergence flag, so they
-unroll their own rounds instead of going through :func:`fixpoint`.
+Other fixed-count loops (BPE merges, k-means, farthest-point sampling)
+run a set number of rounds with no convergence flag, so they unroll
+their own rounds instead of going through :func:`fixpoint`.
 """
 
 from __future__ import annotations
@@ -72,6 +87,7 @@ from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 _CYCLIC = (
     "ancestor_closure did not converge: cyclic input "
@@ -149,6 +165,52 @@ def _small_graph(edges: DataFrame):
     return ids, np.searchsorted(ids, node), np.searchsorted(ids, anc)
 
 
+def pair_graph(pairs: DataFrame):
+    """The undirected graph of the ``(doc_a, doc_b)`` pairs for a
+    driver-side kernel: ``(ids, s, t, key)``, where ``s``/``t`` hold
+    every pair in both orientations as indices into the sorted node ids
+    (repeated pairs kept) and ``key`` is the Spark type the two columns
+    union to, the key type of the Spark loop's output. ``None`` where
+    :func:`_small_graph` gives ``None`` (more pairs than the bound, a
+    threshold of -1, a null end), or where the key is not an integer
+    type, whose values the cast to long would not keep; the caller then
+    runs its Spark loop."""
+    import numpy as np
+
+    key = (
+        pairs.select("doc_a")
+        .unionByName(pairs.select(F.col("doc_b").alias("doc_a")))
+        .schema[0]
+        .dataType
+    )
+    if not isinstance(key, IntegralType):
+        return None
+    graph = _small_graph(
+        pairs.select(F.col("doc_a").alias("node"), F.col("doc_b").alias("anc"))
+    )
+    if graph is None:
+        return None
+    ids, a, b = graph
+    return ids, np.concatenate((a, b)), np.concatenate((b, a)), key
+
+
+def local_fixpoint(
+    state,
+    step: Callable,
+    done: Callable[[dict], bool],
+    max_rounds: int,
+    what: str,
+):
+    """:func:`fixpoint` on the driver: ``step`` maps a state to the next
+    state and that round's metrics, which ``done`` reads as it reads a
+    round's observed flags, under the same cap and the same raise."""
+    for _ in range(max_rounds):
+        state, metrics = step(state)
+        if done(metrics):
+            return state
+    raise _not_converged(what, max_rounds)
+
+
 # Sources per _bfs call: a call holds the keys it has emitted, so this
 # bounds a task's memory by what 4096 sources reach, not by the closure.
 # A 600k-node DAG's slice (150k sources, 12.8M pairs) ran in 184 MB and
@@ -200,55 +262,61 @@ def _bfs(ids, off, adj, src, max_level: int) -> Iterator:
             )
 
 
-def _bfs_closure(edges: DataFrame, graph, max_rounds: int, what: str) -> DataFrame:
-    """The ``(node, ancestor, dist)`` closure of ``graph`` (from
-    :func:`_small_graph`), materialised: one ``mapInArrow`` runs
-    :func:`_bfs` over ``defaultParallelism`` strided slices of the nodes
-    that have a parent (strided, because ids often grow with depth, as
-    in a chain, where a contiguous range of the deepest ids would carry
-    most of the closure), ``_BFS_SOURCES`` sources per BFS, and one job
-    (:func:`_materialise`) computes it while observing ``max(dist)``
-    and whether some node is its own ancestor.
-    The CSR adjacency (distinct edges sorted by source, ``off`` its row
-    offsets) ships inside the kernel's function, which Spark itself
-    broadcasts once it pickles to more than
+def _kernel(spark, src, walk, schema: str, flags: Sequence[Column]):
+    """ONE ``mapInArrow`` that runs ``walk`` (a numpy generator of Arrow
+    batches in ``schema``) over ``defaultParallelism`` strided slices of
+    the node indices ``src``, ``_BFS_SOURCES`` sources per call, and one
+    job (:func:`_materialise`) that computes it while observing
+    ``flags``; returns the materialised frame and the metrics. Slices
+    are strided because ids often grow with depth, as in a chain, where
+    a contiguous range of the deepest ids would carry most of the
+    closure. The graph ``walk`` closes over ships inside the kernel's
+    function, which Spark itself broadcasts once it pickles to more than
     ``spark.broadcast.UDFCompressionThreshold`` (1 MB); an explicit
     ``sc.broadcast`` would leave one temp file per call until the
-    context stops. BFS stops at depth 2^max_rounds + 1, so an input too
-    deep for the cap shows as a ``dist`` above 2^max_rounds, which
-    raises "did not converge"; a self-pair raises the cyclic-input
-    error when ``what`` is ``ancestor_closure``."""
-    import numpy as np
-
-    spark = edges.sparkSession
-    ids, u, v = graph
-    u, v = np.divmod(np.unique(u * len(ids) + v), len(ids))
-    off = np.searchsorted(u, np.arange(len(ids) + 1))
-    src = np.unique(u)
-    parts, max_level = spark.sparkContext.defaultParallelism, 2**max_rounds + 1
+    context stops."""
+    parts = spark.sparkContext.defaultParallelism
 
     def run(batches):
         for b in batches:
             for p in b.column(0).to_pylist():
                 part = src[p::parts]
                 for i in range(0, len(part), _BFS_SOURCES):
-                    chunk = part[i : i + _BFS_SOURCES]
-                    yield from _bfs(ids, off, v, chunk, max_level)
+                    yield from walk(part[i : i + _BFS_SOURCES])
 
-    out, m = _materialise(
-        spark.range(parts, numPartitions=parts).mapInArrow(
-            run, "node long, ancestor long, dist long"
-        ),
-        [
-            F.max("dist").alias("max_dist"),
-            F.max((F.col("node") == F.col("ancestor")).cast("int")).alias("any_self"),
-        ],
+    return _materialise(
+        spark.range(parts, numPartitions=parts).mapInArrow(run, schema), flags
     )
-    if what == "ancestor_closure" and m["any_self"]:
-        raise RuntimeError(_CYCLIC)
-    if (m["max_dist"] or 0) > 2**max_rounds:
-        raise _not_converged(what, max_rounds + 1)
-    return out
+
+
+def _paths(ids, par, src, max_level: int) -> Iterator:
+    """One Arrow batch of ``(node, path)`` for the node indices ``src``
+    of a functional graph (``par``: each node's parent index, -1 at a
+    root): ``path`` lists the ids of the node's first ``max_level``
+    ancestors nearest first. A walk stops at a root, or on reaching its
+    own node again, so a cycle shows as a path that holds its node."""
+    import numpy as np
+    import pyarrow as pa
+
+    slot, at = np.arange(len(src)), par[src]
+    slots, hops = [], []
+    while at.size and len(hops) < max_level:
+        slots.append(slot)
+        hops.append(at)
+        go = (par[at] >= 0) & (at != src[slot])
+        slot, at = slot[go], par[at[go]]
+    slot = np.concatenate(slots)
+    order = np.argsort(slot, kind="stable")  # a slot's hops stay nearest first
+    off = np.concatenate(([0], np.cumsum(np.bincount(slot, minlength=len(src)))))
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(ids[src]),
+            pa.ListArray.from_arrays(
+                pa.array(off, pa.int32()), pa.array(ids[np.concatenate(hops)[order]])
+            ),
+        ],
+        names=["node", "path"],
+    )
 
 
 def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
@@ -261,10 +329,12 @@ def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
     2^max_rounds, raises "did not converge" at build time.
 
     Kernel path (the edges fit the broadcast threshold and no node has
-    two parent rows): on a forest the BFS kernel's rows are the walk's
-    rows; a cycle shows as a self-pair and a node too deep as a
-    ``dist`` above 2^max_rounds, both observed by the job that
-    materialises the kernel's output.
+    two parent rows): each node's path is walked up its parent vector
+    (:func:`_paths`), at most 2^max_rounds + 1 ancestors, and the
+    ``(node, path)`` rows are the loop's final state. A cycle shows as
+    a path that holds its own node and a node too deep as a path longer
+    than 2^max_rounds, both observed by the job that materialises the
+    paths.
 
     Loop path invariant: at the start of round k every unfinished row
     holds its first 2^(k-1) ancestors, and so does the ancestor it joins
@@ -279,7 +349,26 @@ def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
 
     graph = _small_graph(edges)
     if graph is not None and len(np.unique(graph[1])) == len(graph[1]):
-        return _bfs_closure(edges, graph, max_rounds, "ancestor_closure")
+        ids, u, v = graph
+        par = np.full(len(ids), -1)
+        par[u] = v
+        state, m = _kernel(
+            edges.sparkSession,
+            np.sort(u),
+            lambda src: _paths(ids, par, src, 2**max_rounds + 1),
+            "node long, path array<long>",
+            [
+                F.max(F.size("path")).alias("depth"),
+                F.max(F.array_contains("path", F.col("node")).cast("int")).alias(
+                    "any_self"
+                ),
+            ],
+        )
+        if m["any_self"]:
+            raise RuntimeError(_CYCLIC)
+        if (m["depth"] or 0) > 2**max_rounds:
+            raise _not_converged("ancestor_closure", max_rounds + 1)
+        return _explode(state)
 
     def step(state: DataFrame) -> DataFrame:
         s, t = state.filter(~F.col("done")).alias("s"), state.alias("t")
@@ -317,6 +406,11 @@ def ancestor_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
         max_rounds + 1,
         "ancestor_closure",
     )
+    return _explode(state)
+
+
+def _explode(state: DataFrame) -> DataFrame:
+    """The ``(node, ancestor, dist)`` rows of ``(node, path)`` rows."""
     return state.select(
         "node", F.posexplode("path").alias("pos", "ancestor")
     ).select(
@@ -360,9 +454,23 @@ def min_dist_closure(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
     delta. Detecting convergence costs one extra no-change round, so the
     loop runs ``max_rounds + 1`` rounds.
     """
+    import numpy as np
+
     graph = _small_graph(edges)
     if graph is not None:
-        return _bfs_closure(edges, graph, max_rounds, "min_dist_closure")
+        ids, u, v = graph
+        u, v = np.divmod(np.unique(u * len(ids) + v), len(ids))
+        off = np.searchsorted(u, np.arange(len(ids) + 1))
+        out, m = _kernel(
+            edges.sparkSession,
+            np.unique(u),
+            lambda src: _bfs(ids, off, v, src, 2**max_rounds + 1),
+            "node long, ancestor long, dist long",
+            [F.max("dist").alias("max_dist")],
+        )
+        if (m["max_dist"] or 0) > 2**max_rounds:
+            raise _not_converged("min_dist_closure", max_rounds + 1)
+        return out
 
     improved = F.col("old").isNull() | (F.col("dist") < F.col("old"))
 

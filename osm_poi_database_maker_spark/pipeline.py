@@ -127,13 +127,12 @@ def poi_nodes(nodes: DataFrame, taginfo: DataFrame, settings: Settings) -> DataF
     geom hex-WKB)."""
     dim = build_toi_dim(taginfo, settings)
     filtered = poi_filter(dedup_latest(nodes), dim, settings)
-    with_geom = filtered.withColumn(
-        "geom",
-        F.when(
-            F.col("geom_valid") & F.col("lon").isNotNull() & F.col("lat").isNotNull(),
-            geo.wkb_point_hex(F.col("lon"), F.col("lat")),
-        ),
-    ).filter(F.col("geom").isNotNull())
+    # the UDF is NULL exactly when a coordinate is, so filtering on the
+    # inputs keeps the same rows; a filter on its output would be pushed
+    # below the TOI semi-join with its own copy of the UDF
+    with_geom = filtered.filter(
+        F.col("geom_valid") & F.col("lon").isNotNull() & F.col("lat").isNotNull()
+    ).withColumn("geom", geo.wkb_point_hex(F.col("lon"), F.col("lat")))
     return _projection(with_geom, settings)
 
 

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import fixture_version, load_table, session_memo
-from ..ops.recursion import fixpoint
+from ..ops.recursion import fixpoint, local_fixpoint, pair_graph
 
 
 def q_doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1168,28 +1168,51 @@ def q_doc_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup neighborhood better than min-id when clusters are star-shaped
     (the hub that everything resembles scores highest).
 
-    The fixed-count shape beside the ops.recursion.fixpoint loops:
-    each iteration is ONE edges⨝ranks equi-join shuffled on the source
-    id + one groupBy(dst) — per-iteration cost is |E| shuffle rows, and
-    the iteration count is FIXED, so the whole thing is one static
-    Catalyst DAG (3 unrolled joins) that the oracle mirrors with 3
-    unrolled CTEs; no driver-side convergence probe. The per-iteration
-    ``localCheckpoint`` of the |V|-row rank vector keeps lineage flat
-    (dedup_clusters' scale discipline). N arrives as a 1-row aggregate
-    cross join, never a driver count.
+    Each iteration sets pr(t) = (1 - d)/N + d · Σ pr(s)/deg(s) over the
+    edges s→t of the symmetrized pair list (a repeated pair counts each
+    time), with N the number of vertices that have an edge and pr = 1/N
+    at the start; the iteration count is fixed, so there is no
+    convergence probe, and the oracle mirrors it with 3 unrolled CTEs.
 
-    r15 shape cuts (same values, fewer tiny stages — the r14
-    parallelismFirst floor made every extra byte-small stage cost real
-    wall time): (a) deg is folded into the checkpointed weighted edge
-    list ONCE, so each iteration joins edges against only the rank
-    vector instead of rank + deg; (b) the per-iteration
-    nodes ⟕ contrib re-anchor join is GONE — on a symmetrized edge
-    list every vertex appears as a destination (it has ≥1 in-edge), so
-    contrib already covers all |V| vertices and the left join was an
-    identity; (c) nodes/distinct never materializes — deg's group keys
-    ARE the vertex set, so init and N both read deg.
+    Below the broadcast bound (``ops.recursion.pair_graph``) one job
+    collects the pairs and the iterations run in numpy on the driver;
+    the ranks come back as a local frame and are rounded in Spark, as
+    on the loop path, so the build runs that one job. Above it, each
+    iteration is ONE edges⨝ranks equi-join shuffled on the source id +
+    one groupBy(dst): deg is folded into the checkpointed weighted edge
+    list once, every vertex is a destination of the symmetrized list
+    (so contrib covers all of them without a re-anchor join), N arrives
+    as a 1-row aggregate cross join, never a driver count, and each
+    iteration's |V|-row rank vector is checkpointed lazily to keep the
+    lineage flat.
     """
     pairs = _ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    graph = pair_graph(pairs)
+    pr = _pagerank(spark, graph) if graph is not None else _pagerank_loop(pairs)
+    return pr.select(F.col("id").alias("doc_id"), F.round("pr", 6).alias("pagerank"))
+
+
+def _pagerank(spark: SparkSession, graph) -> DataFrame:
+    """The ``(id, pr)`` ranks of ``graph`` (from
+    ``ops.recursion.pair_graph``) computed in numpy, as a local frame."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids, s, t, key = graph
+    n = len(ids) or 1  # N; no pairs leave no rank to divide
+    deg = np.bincount(s, minlength=len(ids))
+    pr = np.full(len(ids), 1.0 / n)
+    for _ in range(_PR_ITERS):
+        contrib = np.bincount(t, weights=(pr / deg)[s], minlength=len(ids))
+        pr = (1.0 - _PR_DAMPING) / n + _PR_DAMPING * contrib
+    return spark.createDataFrame(pa.table({"id": ids, "pr": pr})).select(
+        F.col("id").cast(key), "pr"
+    )
+
+
+def _pagerank_loop(pairs: DataFrame) -> DataFrame:
+    """The ``(id, pr)`` ranks of ``pairs`` by Spark joins, one lazily
+    checkpointed rank vector per iteration."""
     edges = (
         pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
         .unionByName(pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("t")))
@@ -1217,7 +1240,7 @@ def q_doc_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=False)
         )
-    return pr.select(F.col("id").alias("doc_id"), F.round("pr", 6).alias("pagerank"))
+    return pr
 
 
 def _pr_iter_sql(k: int) -> str:
@@ -1448,8 +1471,23 @@ def q_doc_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset of the previous round's, so equal counts ⇒ identical sets ⇒
     fixed point; each round observes its survivor count in the job
     that materialises it, and a peel that has not repeated a count
-    after 8 rounds raises "did not converge"."""
+    after 8 rounds raises "did not converge".
+
+    Below the broadcast bound (``ops.recursion.pair_graph``) one job
+    collects the pairs and the same peel runs in numpy on the driver
+    (``ops.recursion.local_fixpoint``, with the same ``done`` rule, cap
+    and raise); the core comes back as a local frame, so the build runs
+    that one job instead of a job per round."""
     pairs = _ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    counts: list[int] = []
+
+    def done(m: dict) -> bool:
+        counts.append(m["n"])
+        return len(counts) >= 2 and counts[-1] == counts[-2]
+
+    graph = pair_graph(pairs)
+    if graph is not None:
+        return _kcore(spark, graph, done)
     edges = (
         pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
         .unionByName(
@@ -1467,12 +1505,6 @@ def q_doc_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("core_deg") >= _KCORE_K)
         )
 
-    counts: list[int] = []
-
-    def done(m: dict) -> bool:
-        counts.append(m["n"])
-        return len(counts) >= 2 and counts[-1] == counts[-2]
-
     core = fixpoint(
         edges.select(F.col("s").alias("v")).distinct(),
         step,
@@ -1482,6 +1514,31 @@ def q_doc_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_graph_kcore peel",
     )
     return core.select(F.col("v").alias("doc_id"), "core_deg")
+
+
+def _kcore(spark: SparkSession, graph, done) -> DataFrame:
+    """:func:`q_doc_graph_kcore`'s peel in numpy over ``graph`` (from
+    ``ops.recursion.pair_graph``), stopped by the same ``done``: the
+    ``(doc_id, core_deg)`` core as a local frame."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids, s, t, key = graph
+
+    # the state is each node's core degree, 0 once peeled
+    def step(deg):
+        live = (deg[s] > 0) & (deg[t] > 0)
+        deg = np.bincount(s[live], minlength=len(ids))
+        deg[deg < _KCORE_K] = 0
+        return deg, {"n": int(np.count_nonzero(deg))}
+
+    deg = local_fixpoint(
+        np.ones(len(ids), np.int64), step, done, _KCORE_ROUNDS, "doc_graph_kcore peel"
+    )
+    core = deg > 0
+    return spark.createDataFrame(
+        pa.table({"doc_id": ids[core], "core_deg": deg[core]})
+    ).select(F.col("doc_id").cast(key), "core_deg")
 
 
 def _kcore_oracle_sql() -> str:

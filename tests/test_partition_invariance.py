@@ -51,10 +51,15 @@ def test_result_invariant_to_shuffle_partitions(spark, name):
     assert low == high and len(low) > 0
 
 
-_CLOSURES = [
+# the iterative queries: the closures, and the graph queries whose
+# kernels and loops share the broadcast bound
+_ITERATIVE = [
     "customer_referral_closure",
     "customer_referral_rollup",
     "customer_dag_min_paths",
+    "doc_dedup_clusters",
+    "doc_graph_pagerank",
+    "doc_graph_kcore",
 ]
 _LAYOUTS = {
     "partitions_1": {"spark.sql.shuffle.partitions": "1"},
@@ -64,9 +69,9 @@ _LAYOUTS = {
 
 
 @pytest.mark.parametrize("layout", sorted(_LAYOUTS))
-@pytest.mark.parametrize("name", _CLOSURES)
+@pytest.mark.parametrize("name", _ITERATIVE)
 def test_closures_match_oracle_under_layouts(spark, name, layout):
-    """The iterative closures checkpoint and join once per round, so the
+    """The iterative queries checkpoint and join once per round, so the
     partitioning of every round's frame changes with the layout; each
     layout's result must still value-match the DuckDB oracle."""
     import __spark_entry__ as entrymod
@@ -87,11 +92,11 @@ def test_closures_match_oracle_under_layouts(spark, name, layout):
 
 
 @pytest.mark.parametrize("layout", ["aqe_off", "partitions_7"])
-@pytest.mark.parametrize("name", _CLOSURES)
+@pytest.mark.parametrize("name", _ITERATIVE)
 def test_closures_loop_path_match_oracle_under_layouts(spark, name, layout):
     """The same gate on the round loop: with the broadcast threshold at
-    -1 the closures skip the BFS kernel, so the loop each one falls back
-    to above that bound stays value-gated."""
+    -1 the iterative queries skip their kernels, so the loop each one
+    falls back to above that bound stays value-gated."""
     import __spark_entry__ as entrymod
     from tools.check import compare, duck
 

@@ -72,3 +72,11 @@ def test_ways_to_centroids(spark):
     # large way 101 kept as polygon, not centroid
     kept = {r.id for r in pw.collect()}
     assert 101 in kept and 103 not in kept and 104 not in kept
+
+
+def test_poi_nodes_plan_runs_the_wkb_udf_once(spark):
+    """The geometry filter reads the UDF's inputs, not its output, so no
+    copy of the UDF is pushed below the TOI semi-join."""
+    out = poi_nodes(fx.nodes_df(spark), fx.taginfo_df(spark), SETTINGS)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
