@@ -127,12 +127,18 @@ def poi_nodes(nodes: DataFrame, taginfo: DataFrame, settings: Settings) -> DataF
     geom hex-WKB)."""
     dim = build_toi_dim(taginfo, settings)
     filtered = poi_filter(dedup_latest(nodes), dim, settings)
-    # the UDF is NULL exactly when a coordinate is, so filtering on the
-    # inputs keeps the same rows; a filter on its output would be pushed
-    # below the TOI semi-join with its own copy of the UDF
+    # the UDF is NULL exactly when a coordinate is NULL or NaN (pandas
+    # reads NaN as missing), so filtering on its inputs keeps the rows a
+    # filter on its output keeps; that filter would be pushed below the
+    # TOI semi-join with its own copy of the UDF
+    lon, lat = F.col("lon"), F.col("lat")
     with_geom = filtered.filter(
-        F.col("geom_valid") & F.col("lon").isNotNull() & F.col("lat").isNotNull()
-    ).withColumn("geom", geo.wkb_point_hex(F.col("lon"), F.col("lat")))
+        F.col("geom_valid")
+        & lon.isNotNull()
+        & lat.isNotNull()
+        & ~F.isnan(lon)
+        & ~F.isnan(lat)
+    ).withColumn("geom", geo.wkb_point_hex(lon, lat))
     return _projection(with_geom, settings)
 
 

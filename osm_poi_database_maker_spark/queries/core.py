@@ -693,12 +693,13 @@ def q_customer_referral_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark side: ops.recursion.ancestor_closure. While the edges fit the
     session's broadcast threshold (16 bytes an edge) one job collects
-    them and one more runs a mapInArrow BFS kernel over a CSR adjacency
-    that emits (node, ancestor, dist), checkpoints it and observes the
-    cycle and depth checks. Above that bound the round loop runs pointer
-    jumping: one row per customer carrying its ancestor path, about
-    log2(depth) rounds, each one join of the unfinished rows to the
-    n-row state, then one posexplode; vs the oracle's O(depth)
+    them, the driver rejects a cycle, and one more job runs a mapInArrow
+    kernel that walks the parent vector, emits one (node, path) row per
+    customer, checkpoints them and observes the depth check. Above that
+    bound the round loop runs pointer jumping: one row per customer
+    carrying its ancestor path, about log2(depth) rounds, each one join
+    of the unfinished rows to the n-row state. Both paths end in one
+    lazy posexplode; vs the oracle's O(depth)
     sequential recursive-CTE passes. At a 1e9-customer scale that is
     ~5 n-row shuffles instead of ~30."""
     from ..ops.recursion import ancestor_closure
@@ -808,7 +809,7 @@ def q_customer_referral_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure exists to answer: for every referrer, how many customers
     sit anywhere below them, how deep the subtree runs, and the total
     account balance it carries. Reuses ancestor_closure's output frame
-    (the BFS kernel's checkpoint while the edges fit the broadcast
+    (the kernel's checkpointed paths while the edges fit the broadcast
     threshold, else the pointer-jumping round loop — ~5 n-row shuffles
     instead of ~30 at a 1e9-customer scale) plus one extra shuffle, the
     group-by ancestor, and a broadcast join of customer balances onto
@@ -827,8 +828,9 @@ def q_customer_referral_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clo = ancestor_closure(edges)
     # the hint keeps the customers the build side: the kernel path's
-    # closure is a checkpoint of a mapInArrow over a parts-row range,
-    # whose size estimate would otherwise make it the broadcast side
+    # closure explodes a checkpoint of a mapInArrow over a parts-row
+    # range, whose size estimate would otherwise make it the broadcast
+    # side
     return (
         clo.join(F.broadcast(cust), "node")
         .groupBy(F.col("ancestor").alias("referrer"))

@@ -80,3 +80,14 @@ def test_poi_nodes_plan_runs_the_wkb_udf_once(spark):
     out = poi_nodes(fx.nodes_df(spark), fx.taginfo_df(spark), SETTINGS)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1
+
+
+def test_poi_nodes_drops_a_nan_coordinate_flagged_valid(spark):
+    """A NaN coordinate gives a NULL geometry, so its row is dropped even
+    where ``geom_valid`` says true, as a filter on the geometry drops it."""
+    cafe = fx.NODES[0]
+    nan = float("nan")
+    extra = [(901, *cafe[1:6], nan, 52.1, True), (902, *cafe[1:6], 5.1, nan, True)]
+    nodes = fx.nodes_df(spark).unionByName(spark.createDataFrame(extra, fx._NODE_SCHEMA))
+    ids = {r.id for r in poi_nodes(nodes, fx.taginfo_df(spark), SETTINGS).collect()}
+    assert 1 in ids and not ids & {901, 902}

@@ -86,8 +86,8 @@ def test_fixpoint_observes_an_empty_round(spark):
 def test_closures_build_in_two_jobs_on_the_kernel_path(spark):
     """Under the session's broadcast threshold each closure builds in at
     most two jobs (the edge collect, and the checkpoint that observes
-    its depth and cycle flags); with the threshold at -1 the same build
-    runs the round loop."""
+    its depth flag); with the threshold at -1 the same build runs the
+    round loop."""
     from osm_poi_database_maker_spark.ops.recursion import (
         ancestor_closure,
         min_dist_closure,
@@ -108,3 +108,18 @@ def test_closures_build_in_two_jobs_on_the_kernel_path(spark):
     finally:
         spark.conf.set(key, had)
     assert jobs > 2
+
+
+def test_ancestor_closure_rejects_a_cycle_behind_a_long_tail_unwalked(spark):
+    """A 3-cycle fed by a 3000-node tail raises the cyclic-input error on
+    the kernel path after the edge collect alone: no walk runs, so no
+    tail node walks the whole depth cap before the error."""
+    from osm_poi_database_maker_spark.ops.recursion import _CYCLIC, ancestor_closure
+
+    cycle = spark.createDataFrame([(0, 2), (1, 0), (2, 1)], "node long, anc long")
+    tail = spark.range(3, 3003).select(
+        F.col("id").alias("node"), (F.col("id") - 1).alias("anc")
+    )
+    out, jobs = _run_in_group(spark, lambda: ancestor_closure(cycle.union(tail)))
+    assert isinstance(out, RuntimeError) and str(out) == _CYCLIC
+    assert jobs == 1
